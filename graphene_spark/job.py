@@ -7,9 +7,9 @@
 Stages (each a DataFrame DAG, scheduled together — the reference's fixed
 loader ordering, Importer.groovy:21-24, becomes data dependencies):
   1. extraction + linking (pipeline.run_pipeline)
-  2. canonicalization (connected components over the alias graph)
-  3. materialization with per-bucket lineage (resumable, insert-if-absent)
-  4. post-process rewrites with regression counters (postprocess.*)
+  2. materialization with per-bucket lineage (resumable, insert-if-absent)
+  3. post-process rewrites with regression counters (postprocess.*,
+     with --postprocess)
 
 The run is idempotent: re-invoking with --resume skips completed buckets
 (the 'refuses to touch an existing store' guard of LoadGrameneGraphDb.groovy:40-42
@@ -175,6 +175,10 @@ def main(argv: list[str] | None = None) -> None:
     )
 
     lineage = materialize.read_lineage(spark, os.path.join(args.out, "lineage"))
+    # The table counts are read from the tables, not summed from lineage:
+    # when a bucket's merges committed but its lineage row was lost, the
+    # resumed run replays it and records 0 inserts for it, so a lineage sum
+    # would undercount exactly that state.
     summary = {
         "buckets": totals,
         "triples": sink.read("triples").count(),

@@ -70,6 +70,9 @@ def local_alias_map_rows(dictionary_pdf) -> list[tuple] | None:
 
     Any unexpected shape (non-str alias, NaN/None field, exotic container)
     aborts to None — the caller then simply leaves the Spark path in place.
+    So does a dictionary where no alias survives normalization: an empty
+    map has no aggregation worth skipping, and a local relation built from
+    an empty pandas frame is a conversion corner with nothing to gain.
     """
     import numpy as np
 
@@ -102,7 +105,7 @@ def local_alias_map_rows(dictionary_pdf) -> list[tuple] | None:
                 cur = best.get(norm)
                 if cur is None or tup < cur:
                     best[norm] = tup
-        return [(k, *v) for k, v in best.items()]
+        return [(k, *v) for k, v in best.items()] or None
     except Exception:  # noqa: BLE001 — parity not provable -> Spark path
         return None
 

@@ -6,8 +6,12 @@ the natural key) as named in BASELINE.json:6.  The write path is PLUGGABLE:
 * ``ParquetMergeSink`` (sandbox default) — emulates
   ``MERGE INTO ... WHEN NOT MATCHED THEN INSERT`` on plain parquet:
   anti-join the incoming batch against the existing table on the key and
-  append only new rows, laid out by a key-hash bucket column so the
-  anti-join is partition-pruned.  Combined with deterministic ids
+  append only new rows, laid out by a key-hash bucket column (``_kb``) so
+  the anti-join is partition-pruned.  Each merge clusters its rows by
+  ``_kb`` before the write, so it adds exactly one file per ``_kb`` it
+  touches, and it takes its insert count from the write itself.  Readers
+  get the table's schema from one data file's footer on the driver, so a
+  read launches no schema-inference job.  Combined with deterministic ids
   (graph.node_id) this makes every write idempotent
   (A7 / post-import-cypher MERGE; Importer.groovy:36-52).
 * ``IcebergMergeSink`` — issues REAL ``MERGE INTO`` SQL against an Iceberg
@@ -31,13 +35,15 @@ per-loader progress instrumentation (Importer.groovy:40-43) made durable.
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
 import uuid
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql.types import IntegerType, StructType
 
 
 def _append_parquet(df: DataFrame, path: str) -> None:
@@ -89,20 +95,18 @@ def merge_insert_absent(
             "keys can land in different _kb partitions and the pruned "
             "anti-join re-inserts duplicates"
         )
-    # persist: three actions follow (touched-bucket collect, count, write) —
-    # without it the incoming frame's full upstream pipeline re-executes per
-    # action, tripling the cost of every merge on the hot path
-    base = (
-        df.dropDuplicates(keys)
-        .withColumn("_kb", layout_bucket(lk, key_buckets))
-        .persist()
-    )
+    base = df.dropDuplicates(keys).withColumn("_kb", layout_bucket(lk, key_buckets))
     incoming = base
     recover_compaction(path)
-    if os.path.exists(path):
+    exists = os.path.exists(path)
+    if exists:
+        # persist: two actions follow (touched-bucket collect, write) —
+        # without it the incoming frame's full upstream pipeline re-executes
+        # per action
+        base.persist()
         touched = [r["_kb"] for r in incoming.select("_kb").distinct().collect()]
         existing = (
-            spark.read.parquet(path)
+            _read_table(spark, path)
             .filter(F.col("_kb").isin(touched))  # partition-pruned scan
             .select(*keys, "_kb")
         )
@@ -118,17 +122,88 @@ def merge_insert_absent(
             e = incoming[c].eqNullSafe(ex[f"_ex_{c}"])
             cond = e if cond is None else cond & e
         incoming = incoming.join(ex, cond, "left_anti")
-    n = incoming.count()
-    if n:
-        incoming.write.mode("append").partitionBy("_kb").parquet(path)
-    base.unpersist()
+    n = _write_clustered(incoming, path, "append")
+    if exists:
+        base.unpersist()
+    elif n == 0:
+        # an empty write adds no data file but still creates the directory,
+        # holding only the commit marker: keep "no rows, no table" for the
+        # existence checks of callers and of the next merge
+        shutil.rmtree(path)
     return n
+
+
+def _write_clustered(df: DataFrame, path: str, mode: str) -> int:
+    """Write ``df`` partitioned by ``_kb`` and return the rows written.
+
+    One shuffle keyed on the layout column gives each ``_kb`` value one
+    task, and so one file; the row count is observed on the write itself
+    instead of by a separate action."""
+    written = Observation()
+    (
+        df.repartition(F.col("_kb"))
+        .observe(written, F.count(F.lit(1)).alias("n"))
+        .write.mode(mode)
+        .partitionBy("_kb")
+        .parquet(path)
+    )
+    return written.get["n"]
+
+
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The schema of a merged table, ``_kb`` included, from the Spark row
+    metadata in one committed data file's footer, read on the driver; None
+    when the table has no such file or the file has no such key.
+
+    Only ``_kb=*`` directories and data files not prefixed ``_`` or ``.``
+    count as committed: uncommitted task output lives under ``_temporary``,
+    and ``.crc`` sidecars and the ``_SUCCESS`` marker hold no schema."""
+    import pyarrow.parquet as pq
+
+    try:
+        kb_dirs = sorted(
+            e.path for e in os.scandir(path) if e.is_dir() and e.name.startswith("_kb=")
+        )
+    except FileNotFoundError:
+        return None
+    for d in kb_dirs:
+        files = sorted(
+            e.path
+            for e in os.scandir(d)
+            if e.is_file() and e.name.endswith(".parquet")
+            and not e.name.startswith(("_", "."))
+        )
+        if files:
+            meta = pq.read_metadata(files[0]).metadata or {}
+            if _SPARK_ROW_METADATA not in meta:
+                return None
+            schema = StructType.fromJson(json.loads(meta[_SPARK_ROW_METADATA]))
+            return schema.add("_kb", IntegerType())
+    return None
+
+
+def _read_table(spark: SparkSession, path: str) -> DataFrame:
+    """A merged table with its ``_kb`` column: every merged-table read goes
+    through here.
+
+    Handing Spark the footer schema skips the footer schema-inference job
+    that ``spark.read.parquet`` otherwise runs on every read; the ``_kb``
+    directories are listed on the driver because ``session.get_spark`` sets
+    the parallel-listing threshold to ``KEY_BUCKETS``.  A table whose files
+    lack Spark's row metadata (written by another tool) falls back to
+    inference, which reads the same rows."""
+    schema = _footer_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def read_merged(spark: SparkSession, path: str) -> DataFrame:
     """Read a merged table without the layout column."""
     recover_compaction(path)
-    return spark.read.parquet(path).drop("_kb")
+    return _read_table(spark, path).drop("_kb")
 
 
 def read_merged_pruned(
@@ -157,7 +232,7 @@ def read_merged_pruned(
         .distinct()
         .collect()
     ]
-    return spark.read.parquet(path).filter(F.col("_kb").isin(touched)).drop("_kb")
+    return _read_table(spark, path).filter(F.col("_kb").isin(touched)).drop("_kb")
 
 
 def _proc_start_time(pid: int) -> str | None:
@@ -283,11 +358,11 @@ def recover_compaction(path: str) -> bool:
 def compact_merged(spark: SparkSession, path: str) -> dict:
     """Rewrite a merged table so each ``_kb`` partition holds ONE file.
 
-    Every ``merge_insert_absent`` call appends at least one file per touched
-    partition, so a long-running incremental stream accumulates thousands of
-    small files and the probe's pruned scan degrades into a file-listing
-    storm.  This is the parquet emulation of Iceberg's ``rewrite_data_files``
-    maintenance action: read the table, rewrite one file per partition into a
+    Every ``merge_insert_absent`` call that inserts rows appends one file
+    per partition it touches, so a long-running incremental stream
+    accumulates up to one file per ``_kb`` per batch, and the probe's pruned
+    scan degrades into a file-listing storm.  This is the parquet emulation
+    of Iceberg's ``rewrite_data_files`` maintenance action: read the table, rewrite one file per partition into a
     side directory, then atomically swap directories.  A crash mid-swap is
     repaired by ``recover_compaction`` (run here and by every reader/writer
     entry point), so the table is never lost and at worst the compaction
@@ -308,12 +383,9 @@ def compact_merged(spark: SparkSession, path: str) -> dict:
     tmp = path.rstrip("/") + ".compact.tmp"
     try:
         recover_compaction(path)  # we hold the lock, so this repairs crashes only
-        df = spark.read.parquet(path)
+        df = _read_table(spark, path)
         files_before = len(df.inputFiles())
-        rows = df.count()
-        # one shuffle keyed on the layout column -> exactly one task (and so
-        # one file) per _kb partition value
-        df.repartition(F.col("_kb")).write.partitionBy("_kb").parquet(tmp)
+        rows = _write_clustered(df, tmp, "errorifexists")
         os.replace(path, old)
         try:
             os.replace(tmp, path)
@@ -321,7 +393,7 @@ def compact_merged(spark: SparkSession, path: str) -> dict:
             os.replace(old, path)  # restore — the original is still intact
             raise
         shutil.rmtree(old)
-        files_after = len(spark.read.parquet(path).inputFiles())
+        files_after = len(_read_table(spark, path).inputFiles())
     finally:
         if os.path.exists(lock):
             os.remove(lock)

@@ -468,7 +468,7 @@ def compact_dedup_state(spark: SparkSession, out_dir: str) -> dict:
     """Maintenance: fold the dedup state's per-batch small files back to one
     file per ``_kb`` bucket (Iceberg ``rewrite_data_files`` analog).
 
-    Every micro-batch appends at least one file per touched partition of
+    Every micro-batch appends one file per partition it touches in
     ``band_index`` and ``accepted``; after thousands of batches the probe's
     pruned scan pays a file-listing storm even though it opens few bytes.
     Run this between triggers (the stream must be stopped or idle — the swap

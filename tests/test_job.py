@@ -290,3 +290,235 @@ def test_merge_backend_rejects_empty_namespace_halves(spark, tmp_path):
                 "--transcripts", "synthetic:100", "--out", str(tmp_path / "o"),
                 "--merge-backend", bad,
             ])
+
+
+# ---------------------------------------------------------------------------
+# merge sink I/O: clustered writes, observed insert counts, footer-schema reads
+# ---------------------------------------------------------------------------
+
+_JOB_ARGS = ["--transcripts", "synthetic:400", "--dictionary", "synthetic",
+             "--buckets", "2", "--postprocess"]
+_TABLE_KEYS = {"triples": ["subj", "pred", "obj"], "nodes": ["node_id"],
+               "edges": ["src", "rel_type", "dst"]}
+
+
+def _data_files(path: str) -> set[str]:
+    """Committed data files of a merged table."""
+    return {
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(path)
+        if "_temporary" not in root
+        for f in files
+        if f.endswith(".parquet") and not f.startswith(".")
+    }
+
+
+def _comparable(df):
+    """``df`` with each map column as its sorted entry array, so exceptAll
+    (which refuses map columns) can compare rows."""
+    import pyspark.sql.functions as F
+    from pyspark.sql.types import MapType
+
+    return df.select(*[
+        F.array_sort(F.map_entries(f.name)).alias(f.name)
+        if isinstance(f.dataType, MapType) else F.col(f.name)
+        for f in df.schema.fields
+    ])
+
+
+def _same_rows(a, b) -> bool:
+    a, b = _comparable(a), _comparable(b.select(*a.columns))
+    return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
+@pytest.fixture(scope="module")
+def clean_run(spark, tmp_path_factory):
+    """The output directory of one clean ``job.main`` run (read-only)."""
+    from graphene_spark import job
+
+    out = str(tmp_path_factory.mktemp("clean") / "out")
+    job.main([*_JOB_ARGS, "--out", out, "--master", "local[4]"])
+    return out
+
+
+def test_merge_writes_one_file_per_touched_kb(spark, tmp_path):
+    """Each merge, into a fresh table and into an existing one, adds
+    exactly one data file per ``_kb`` it touches; a replay inserts nothing
+    and adds no data file; an empty merge into a fresh table leaves no
+    table."""
+    import pyspark.sql.functions as F
+
+    path = str(tmp_path / "t")
+
+    def frame(lo, hi):
+        # spread over 8 input partitions: an unclustered partitioned write
+        # would add up to 8 files per touched _kb
+        return spark.range(lo, hi, numPartitions=8).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+        )
+
+    def one_file_per_touched_kb(files, df):
+        touched = {r["_kb"] for r in df.select(materialize.layout_bucket(["k"]).alias("_kb"))
+                   .distinct().collect()}
+        dirs = [os.path.basename(os.path.dirname(f)) for f in files]
+        return sorted(dirs) == sorted(f"_kb={kb}" for kb in touched)
+
+    assert materialize.merge_insert_absent(spark, frame(0, 500), path, ["k"]) == 500
+    files = _data_files(path)
+    assert one_file_per_touched_kb(files, frame(0, 500))
+
+    # 100 keys already present, 60 new ones
+    assert materialize.merge_insert_absent(spark, frame(400, 560), path, ["k"]) == 60
+    assert one_file_per_touched_kb(_data_files(path) - files, frame(500, 560))
+
+    before = _data_files(path)
+    assert materialize.merge_insert_absent(spark, frame(400, 560), path, ["k"]) == 0
+    assert _data_files(path) == before
+    assert materialize.read_merged(spark, path).count() == 560
+
+    fresh = str(tmp_path / "fresh")
+    assert materialize.merge_insert_absent(spark, frame(0, 0), fresh, ["k"]) == 0
+    assert not os.path.exists(fresh)
+
+
+def test_read_merged_scan_runs_one_job(spark, tmp_path):
+    """A full scan of a 64-``_kb`` merged table is one Spark job: the
+    ``_kb`` directories are listed on the driver and the schema comes from a
+    footer, so neither a listing job nor a schema-inference job runs."""
+    import uuid
+
+    import pyspark.sql.functions as F
+
+    path = str(tmp_path / "t")
+    df = spark.range(2000).select(F.col("id").alias("k"), F.col("id").cast("string").alias("v"))
+    materialize.merge_insert_absent(spark, df, path, ["k"])
+    assert len([d for d in os.listdir(path) if d.startswith("_kb=")]) == materialize.KEY_BUCKETS
+
+    sc = spark.sparkContext
+    group = f"read-merged-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "noop scan of a merged table")
+    try:
+        materialize.read_merged(spark, path).write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_footer_schema_read_matches_inference(spark, clean_run):
+    """The footer-schema read gives the same schema and rows as
+    ``spark.read.parquet`` on every table of a job run, map and array
+    columns included."""
+    from pyspark.sql.types import ArrayType, MapType
+
+    types = set()
+    for name in _TABLE_KEYS:
+        path = os.path.join(clean_run, name)
+        assert materialize._footer_schema(path) is not None
+        got = materialize._read_table(spark, path)
+        want = spark.read.parquet(path)
+        assert got.schema == want.schema
+        assert _same_rows(got, want)
+        types |= {type(f.dataType) for f in got.schema.fields}
+    assert {MapType, ArrayType} <= types
+
+
+def test_read_without_spark_footer_falls_back_to_inference(spark, tmp_path):
+    """A table whose data file carries no Spark row metadata (written by
+    another tool) is read through schema inference, with the same rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t")
+    schema = pa.schema([("k", pa.int64()), ("v", pa.string()), ("tags", pa.list_(pa.string()))])
+    rows = {0: [(1, "a", ["x"]), (2, "b", [])], 5: [(3, None, ["y", "z"])]}
+    for kb, rs in rows.items():
+        os.makedirs(f"{path}/_kb={kb}")
+        pq.write_table(
+            pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rs], schema=schema),
+            f"{path}/_kb={kb}/a.parquet",
+        )
+    assert materialize._footer_schema(path) is None
+    got = materialize.read_merged(spark, path)
+    want = spark.read.parquet(path).drop("_kb")
+    assert got.schema == want.schema
+    assert _same_rows(got, want)
+    assert sorted((r["k"], r["v"], tuple(r["tags"])) for r in got.collect()) == [
+        (1, "a", ("x",)), (2, "b", ()), (3, None, ("y", "z"))
+    ]
+
+
+def test_summary_counts_tables_after_lost_lineage(spark, clean_run, tmp_path, capsys):
+    """After one bucket's lineage row is lost and the run resumes, the
+    printed counts are the tables' row counts — a sum over lineage would
+    miss the replayed bucket, which records 0 inserts."""
+    import json
+    import shutil
+
+    from graphene_spark import job
+
+    out = str(tmp_path / "out")
+    shutil.copytree(clean_run, out)
+    lin_path = os.path.join(out, "lineage")
+    lin = spark.read.parquet(lin_path)
+    kept = lin.filter("bucket <> 1").toPandas()
+    materialize.reset_output(lin_path)
+    spark.createDataFrame(kept, schema=lin.schema).write.parquet(lin_path)
+
+    capsys.readouterr()
+    job.main([*_JOB_ARGS, "--out", out, "--master", "local[4]", "--resume"])
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["buckets"] == {"buckets_run": 1, "buckets_skipped": 1}
+    lin = spark.read.parquet(lin_path)
+    assert lin.filter("bucket = 1").first()["n_triples"] == 0
+    # the lineage sum undercounts; the summary does not
+    assert lin.agg({"n_triples": "sum"}).first()[0] < summary["triples"]
+    for name in _TABLE_KEYS:
+        assert summary[name] == spark.read.parquet(os.path.join(out, name)).count()
+
+
+_KILL_AFTER_TRIPLES_MERGE = """
+import os, signal, sys
+sys.path.insert(0, {repo!r})
+from graphene_spark import job, materialize
+
+merge = materialize.merge_insert_absent
+
+def merge_then_die(spark, df, path, *args, **kwargs):
+    n = merge(spark, df, path, *args, **kwargs)
+    if os.path.basename(path.rstrip("/")) == "triples":
+        os.kill(os.getpid(), signal.SIGKILL)
+    return n
+
+materialize.merge_insert_absent = merge_then_die
+job.main(sys.argv[1:])
+"""
+
+
+def test_resume_after_kill_following_triples_merge(spark, clean_run, tmp_path):
+    """A job SIGKILLed right after its first ``triples`` merge commits, then
+    resumed, ends with exactly the tables of a clean run: no identity key
+    twice, and one ``done`` lineage row per bucket."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = str(tmp_path / "out")
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", _KILL_AFTER_TRIPLES_MERGE.format(repo=repo),
+         *_JOB_ARGS, "--out", out, "--master", "local[2]"],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == -9, proc.stderr[-3000:]
+    assert _data_files(os.path.join(out, "triples"))
+    assert not os.path.exists(os.path.join(out, "lineage"))
+
+    from graphene_spark import job
+
+    job.main([*_JOB_ARGS, "--out", out, "--master", "local[4]", "--resume"])
+    for name, keys in _TABLE_KEYS.items():
+        got = spark.read.parquet(os.path.join(out, name))
+        assert _same_rows(got, spark.read.parquet(os.path.join(clean_run, name)))
+        assert got.groupBy(*keys).count().filter("count > 1").isEmpty()
+    lin = spark.read.parquet(os.path.join(out, "lineage")).filter("status = 'done'")
+    assert sorted(r["bucket"] for r in lin.select("bucket").collect()) == [0, 1]

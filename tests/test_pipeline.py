@@ -255,6 +255,40 @@ def test_dictionary_to_spark_stamps_local_alias_map(spark):
     assert linking.alias_map(df) is linking.alias_map(df)
 
 
+def test_local_alias_map_empty_keeps_spark_path(spark):
+    """A dictionary whose aliases all normalize to '' gets no precomputed
+    map (the Spark path stays in place) and links exactly as a frame
+    stamped with the empty map would: nothing links, everything is
+    unlinked."""
+    import pandas as pd
+
+    from graphene_spark import linking
+
+    pdf = pd.DataFrame(
+        {
+            "entity_id": [1, 2],
+            "canonical_name": ["A", "B"],
+            "aliases": [["-", "  "], ["_", ""]],
+            "entity_type": ["T", "T"],
+            "is_hot": [False, True],
+        }
+    )
+    assert linking.local_alias_map_rows(pdf) is None
+    plain = pipeline.dictionary_to_spark(spark, pdf)
+    assert getattr(plain, "_gs_alias_map_rows", None) is None
+    stamped = pipeline.dictionary_to_spark(spark, pdf)
+    stamped._gs_alias_map_rows = []
+    mentions = spark.createDataFrame(
+        [(1, 0, "a"), (1, 1, "b"), (2, 0, "")], "conv_id int, turn_idx int, norm string"
+    )
+
+    def link(dic):
+        linked, unlinked = linking.link_mentions(mentions, dic, strategy="broadcast")
+        return sorted(map(tuple, linked.collect())), sorted(map(tuple, unlinked.collect()))
+
+    assert link(plain) == link(stamped) == ([], sorted(map(tuple, mentions.collect())))
+
+
 def test_local_alias_map_unprovable_inputs_fall_back():
     """Any input where byte-parity with the SQL path is not PROVEN must
     return None (the caller then keeps the Spark aggregation): non-ASCII
