@@ -6,35 +6,24 @@ we make ordering explicit and stable with a window over (conv_id, turn_idx)
 (region, start)).  The per-turn text-equality invariant (input_hint) is tested
 against the oracle's sorted walk.
 
-Extraction: one Arrow-batched stage per turn batch (input_hint mandates
-vectorized pandas/Arrow UDFs — never row-at-a-time Python UDFs).  Three
-parity-pinned implementations share ``_extract_batch`` / the frozen
-``rules.extract_turn`` the oracle uses, so parity is by construction:
+Extraction: ONE Arrow-batched stage per turn batch, ``extract_rows_arrow``
+(mapInArrow — input_hint mandates vectorized Arrow UDFs, never
+row-at-a-time Python UDFs).  Match finding runs in the C scanner
+(native_scan.py) when it is available, with a per-row regex fallback;
+every transform is the frozen ``rules`` code the oracle uses, and the
+full output is fuzz-pinned against ``rules.extract_turn``
+(tests/test_extract.py).
 
-* ``extract_rows_arrow`` — mapInArrow, the pipeline DEFAULT (no pandas
-  materialization on either end of a batch);
-* ``extract_rows``       — mapInPandas (the widely-exercised API variant);
-* ``extract_rows_native``— built-in SQL regex only (whole-stage codegen,
-  dependency-free cross-check; slower on the big gazetteer alternation).
-
-All three take ``kinds`` to push the row-kind filter INSIDE the stage
-(Catalyst cannot push a post-UDF filter through the Python boundary).
-The Spark plan stays a single narrow stage: scan -> map -> rows (no
-shuffle until linking).
+``kinds`` pushes the row-kind filter INSIDE the stage (Catalyst cannot
+push a post-UDF filter through the Python boundary).  The Spark plan
+stays a single narrow stage: scan -> mapInArrow -> rows (no shuffle
+until linking).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from . import native_scan, rules
 
@@ -55,39 +44,6 @@ def _gaz_for(aliases: tuple[str, ...]):
     return gaz
 
 
-def _scan_method(scanner, full_name: str, mentions_name: str):
-    """(bound scan method | None, is_full) for this batch run.
-
-    Default is the FULL scan (mentions + relation-grammar clauses in C);
-    ``GRAPHENE_SPARK_NO_NATIVE_GRAMMAR=1`` drops back to the mentions-only
-    scan with the regex grammar — the round-6a behavior — without touching
-    the gazetteer fast path (and ``GRAPHENE_SPARK_NO_NATIVE_SCAN=1`` still
-    kills both, scanner_for returns None)."""
-    if scanner is None:
-        return None, False
-    import os
-
-    if os.environ.get("GRAPHENE_SPARK_NO_NATIVE_GRAMMAR"):
-        return getattr(scanner, mentions_name), False
-    return getattr(scanner, full_name), True
-
-
-TRIPLE_STRUCT = StructType(
-    [
-        StructField("subj", StringType()),  # null = dangling (no subject mention)
-        StructField("pred", StringType()),
-        StructField("obj", StringType()),
-    ]
-)
-EXTRACT_SCHEMA = StructType(
-    [
-        StructField("mentions", ArrayType(StringType())),
-        StructField("triples", ArrayType(TRIPLE_STRUCT)),
-        StructField("is_error", IntegerType()),
-    ]
-)
-
-
 def with_stable_order(transcripts: DataFrame) -> DataFrame:
     """Attach a stable per-conversation ordinal (W1).
 
@@ -101,8 +57,8 @@ def with_stable_order(transcripts: DataFrame) -> DataFrame:
 
 # Flat extraction output: one row per turn (kind='turn', metric counts), per
 # mention (kind='mention'), and per raw triple (kind='triple').  Flat columns
-# keep the Arrow transfer cheap — the nested array<struct> variant
-# (make_extract_udf below) spends most of its time serializing nested types.
+# keep the Arrow transfer cheap — a nested array<struct> output spends most
+# of its time serializing nested types.
 EXTRACT_ROWS_SCHEMA = (
     "conv_id string, turn_idx int, kind string, subj string, pred string, "
     "obj string, surface string, n_mentions int, n_triples int, is_error int"
@@ -113,9 +69,8 @@ _VALID_KINDS = frozenset({"turn", "mention", "triple"})
 
 def _validate_kinds(kinds):
     """Fail fast on a misspelled/empty kinds tuple: without this a typo like
-    kinds=('triples',) silently produced an EMPTY extraction (all want_*
-    flags False) on the pandas/arrow paths and an IndexError on the native
-    path — three 'parity-pinned' implementations disagreeing on failure."""
+    kinds=('triples',) silently produces an EMPTY extraction (all want_*
+    flags False)."""
     if kinds is None:
         return
     if not kinds or not set(kinds) <= _VALID_KINDS:
@@ -127,23 +82,20 @@ def _validate_kinds(kinds):
 
 def _extract_batch(conv_in, turn_in, text_in, gaz, kinds=None, mentions_pre=None,
                    clauses_pre=None):
-    """Shared per-row emit loop of extract_rows / extract_rows_arrow —
-    returns the ten flat output lists.  ONE definition so the pandas and
-    Arrow paths cannot silently diverge (their row-for-row parity is
-    pinned by tests/test_extract.py).
+    """Per-row emit loop of extract_rows_arrow's generic path — returns the
+    per-kind column blocks (see _blocks_to_arrow).
 
-    ``mentions_pre`` (optional, row-aligned) carries mention lists already
-    computed by the C gazetteer scanner (native_scan.py) for the whole
-    batch; a ``None`` entry means "scan this row with the regex" (non-ASCII
-    rows, or the native path unavailable).  ``clauses_pre`` (optional,
-    requires ``mentions_pre``) is ``scan_full_arrow``'s columnar clause
-    half ``(counts, cols)``; the loop locates row r's clause slice by
-    carrying the running prefix sum of ``counts`` as a cursor.  Rows with
-    clauses route to ``rules.extract_turn_from_clauses`` (Python
-    transforms, C match finding), scanned rows without any short-circuit
-    to zero triples with no call and no allocation, and fallback rows
-    (``mentions_pre`` entry ``None``, always count 0) take the full regex
-    path.
+    ``mentions_pre`` / ``clauses_pre`` (both given or both None) are the
+    C scanner's ``scan_full_arrow`` result for the whole batch: row-aligned
+    mention lists (a ``None`` entry means "scan this row with the regex":
+    non-ASCII rows) and the columnar clause half ``(counts, cols)``.  The
+    loop locates row r's clause slice by carrying the running prefix sum
+    of ``counts`` as a cursor.  Rows with clauses route to
+    ``rules.extract_turn_from_clauses`` (Python transforms, C match
+    finding), scanned rows without any short-circuit to zero triples with
+    no call and no allocation, and fallback rows (``None`` entry, always
+    count 0) take the full regex path, as does every row when no scanner
+    ran.
 
     ``kinds`` (None = all of turn/mention/triple) is the kind filter PUSHED
     INSIDE the Python stage: Catalyst cannot push a post-UDF filter through
@@ -160,7 +112,7 @@ def _extract_batch(conv_in, turn_in, text_in, gaz, kinds=None, mentions_pre=None
     # of it appending constants — kind strings, null subj/pred/obj/surface,
     # zero counters).  Blocks only store the columns that VARY for their
     # kind (~10 appends/turn vs 25); the constant columns are materialized
-    # O(1)/vectorized at batch-assembly time (pa.nulls / np.zeros).  Row
+    # O(1)/vectorized at batch-assembly time (pa.nulls / pa.repeat).  Row
     # ORDER changes (turn rows, then mentions, then triples, per batch) —
     # every consumer and parity pin is order-insensitive (filters, groupBy,
     # sorted/hash comparisons).
@@ -173,15 +125,11 @@ def _extract_batch(conv_in, turn_in, text_in, gaz, kinds=None, mentions_pre=None
     ar_conv, ar_turn = r_conv.append, r_turn.append
     ar_subj, ar_pred, ar_obj = r_subj.append, r_pred.append, r_obj.append
     extract_turn = rules.extract_turn
-    finish_turn = rules.extract_turn_from_mentions
     finish_clauses = rules.extract_turn_from_clauses
     from itertools import repeat
 
     if mentions_pre is None:
-        mentions_pre = repeat(None)
-        clauses_pre = None
-    if clauses_pre is None:
-        counts, cols = repeat(0), None
+        mentions_pre, counts, cols = repeat(None), repeat(0), None
     else:
         counts, cols = clauses_pre
 
@@ -197,24 +145,21 @@ def _extract_batch(conv_in, turn_in, text_in, gaz, kinds=None, mentions_pre=None
         lo = clo
         clo += cnt
         try:
-            # inside the try: a NULL turn_idx arrives as NaN (pandas) or
-            # None (Arrow to_pylist) and int() raises — a bad row must
-            # become a metric, never a job failure
+            # inside the try: a NULL turn_idx arrives as None (Arrow
+            # to_pylist) and int() raises — a bad row must become a
+            # metric, never a job failure
             turn = int(turn)
             if text is None or text == "" or "\x00" in text:
                 if want_turn:
                     emit_turn(conv, turn, 0, 0, 1)
                 continue
-            if pre is not None:
-                if cols is None:
-                    mentions, triples = finish_turn(text, pre)
-                elif cnt:
-                    mentions, triples = finish_clauses(text, pre, lo, clo, cols)
-                else:
-                    # scanned row, zero grammar clauses: no call, no alloc
-                    mentions, triples = pre, ()
-            else:
+            if pre is None:
                 mentions, triples = extract_turn(text, gaz)
+            elif cnt:
+                mentions, triples = finish_clauses(text, pre, lo, clo, cols)
+            else:
+                # scanned row, zero grammar clauses: no call, no alloc
+                mentions, triples = pre, ()
             if want_turn:
                 emit_turn(conv, turn, len(mentions), len(triples), 0)
             if want_mention:
@@ -233,77 +178,6 @@ def _extract_batch(conv_in, turn_in, text_in, gaz, kinds=None, mentions_pre=None
         (m_conv, m_turn, m_surf),
         (r_conv, r_turn, r_subj, r_pred, r_obj),
     )
-
-
-def extract_rows(
-    transcripts: DataFrame, aliases: list[str], kinds: tuple[str, ...] | None = None
-) -> DataFrame:
-    """Single-pass extraction via mapInPandas with a flat output schema.
-
-    The explode happens inside the Arrow batch (mapInPandas may emit more
-    rows than it receives), so the plan is scan -> mapInPandas — no nested
-    columns, no separate explode, still zero shuffles.  ``kinds`` pushes
-    the row-kind filter inside the Python stage (see _extract_batch)."""
-    _validate_kinds(kinds)
-    alias_tuple = tuple(sorted(set(aliases)))
-
-    def gen(batches):
-        import pandas as pd  # local import for executor workers
-
-        gaz = _gaz_for(alias_tuple)
-        scanner = native_scan.scanner_for(alias_tuple)
-        scan, full = _scan_method(scanner, "scan_texts_full", "scan_texts")
-        for pdf in batches:
-            pre = cl = None
-            if scan is not None:
-                pre = scan(list(pdf["text"]))
-                if full:
-                    pre, cl = pre
-            blocks = _extract_batch(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"], gaz, kinds,
-                mentions_pre=pre, clauses_pre=cl,
-            )
-            # one DataFrame per non-empty kind block (mapInPandas accepts
-            # any number of frames per input batch) — constant columns are
-            # built whole, never appended per row
-            for df in _blocks_to_pandas(pd, blocks):
-                yield df
-
-    return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        gen, schema=EXTRACT_ROWS_SCHEMA
-    )
-
-
-def _blocks_to_pandas(pd, blocks):
-    (t_conv, t_turn, t_nm, t_nt, t_err), (m_conv, m_turn, m_surf), \
-        (r_conv, r_turn, r_subj, r_pred, r_obj) = blocks
-    n = len(t_conv)
-    if n:
-        yield pd.DataFrame(
-            {
-                "conv_id": t_conv, "turn_idx": t_turn, "kind": "turn",
-                "subj": None, "pred": None, "obj": None, "surface": None,
-                "n_mentions": t_nm, "n_triples": t_nt, "is_error": t_err,
-            }
-        )
-    n = len(m_conv)
-    if n:
-        yield pd.DataFrame(
-            {
-                "conv_id": m_conv, "turn_idx": m_turn, "kind": "mention",
-                "subj": None, "pred": None, "obj": None, "surface": m_surf,
-                "n_mentions": 0, "n_triples": 0, "is_error": 0,
-            }
-        )
-    n = len(r_conv)
-    if n:
-        yield pd.DataFrame(
-            {
-                "conv_id": r_conv, "turn_idx": r_turn, "kind": "triple",
-                "subj": r_subj, "pred": r_pred, "obj": r_obj, "surface": None,
-                "n_mentions": 0, "n_triples": 0, "is_error": 0,
-            }
-        )
 
 
 def triples_from_rows(rows: DataFrame) -> DataFrame:
@@ -343,8 +217,8 @@ def _triples_only_batch(conv_in, turn_in, text_in, fbs, counts, surfs, cols, gaz
     try/except (a bad row simply emits nothing — the turn-metric row it
     would have carried belongs to the 'turn' kind, which this path never
     serves), and the shared grammar/transform code paths.  Parity with the
-    generic path is pinned by test_native_scan.py and the extractor parity
-    tests."""
+    generic path is pinned by test_native_scan.py and the extraction fuzz
+    test in test_extract.py."""
     r_conv, r_turn, r_subj, r_pred, r_obj = [], [], [], [], []
     ar_conv, ar_turn = r_conv.append, r_turn.append
     ar_subj, ar_pred, ar_obj = r_subj.append, r_pred.append, r_obj.append
@@ -381,17 +255,17 @@ def _triples_only_batch(conv_in, turn_in, text_in, fbs, counts, surfs, cols, gaz
 def extract_rows_arrow(
     transcripts: DataFrame, aliases: list[str], kinds: tuple[str, ...] | None = None
 ) -> DataFrame:
-    """Same flat extraction as extract_rows, via ``mapInArrow``.
+    """transcripts -> flat extraction rows (EXTRACT_ROWS_SCHEMA) via
+    ``mapInArrow``: one row per turn (metric counts, ``is_error=1`` for
+    bad rows), per mention and per raw triple.
 
-    Skips the pandas materialization on both ends of the batch (input
+    No pandas materialization on either end of the batch (input
     RecordBatch -> python lists directly; output lists -> RecordBatch
     directly), which trims the per-batch memory traffic the single-box
     scaling analysis identifies as the 4N-side residual
-    (BENCH/BASELINE.md).  Measured 0-20% faster than the pandas path under
-    varying host load, and since round 4 the PIPELINE DEFAULT
-    (pipeline.run_pipeline extractor="arrow") — the byte cut is what closes
-    the 4N-side scaling gap on a shared DRAM bus.  Output is row-for-row
-    identical (tests/test_extract.py::test_arrow_extraction_parity)."""
+    (BENCH/BASELINE.md).  ``kinds`` (None = all) keeps only the listed row
+    kinds inside the stage; ``kinds=('triple',)`` takes the
+    scan_triples_arrow fast path when the C scanner is available."""
     _validate_kinds(kinds)
     alias_tuple = tuple(sorted(set(aliases)))
 
@@ -409,8 +283,9 @@ def extract_rows_arrow(
         )
         gaz = _gaz_for(alias_tuple)
         scanner = native_scan.scanner_for(alias_tuple)
-        scan, full = _scan_method(scanner, "scan_full_arrow", "scan_arrow")
-        triples_fast = full and kinds is not None and set(kinds) == {"triple"}
+        triples_fast = (
+            scanner is not None and kinds is not None and set(kinds) == {"triple"}
+        )
         for rb in batches:
             names = rb.schema.names
             text_arr = rb.column(names.index("text"))
@@ -438,13 +313,11 @@ def extract_rows_arrow(
             turn_in = rb.column(names.index("turn_idx")).to_pylist()
             text_in = text_arr.to_pylist()
             pre = cl = None
-            if scan is not None:
-                # scans the RecordBatch's raw UTF-8 buffer in one C call
-                # (two with the grammar pass) — no per-row call overhead,
-                # no Match objects
-                pre = scan(text_arr, text_in)
-                if full:
-                    pre, cl = pre
+            if scanner is not None:
+                # scans the RecordBatch's raw UTF-8 buffer in two C calls
+                # (gazetteer + grammar) — no per-row call overhead, no
+                # Match objects
+                pre, cl = scanner.scan_full_arrow(text_arr, text_in)
             blocks = _extract_batch(
                 conv_in, turn_in, text_in, gaz, kinds,
                 mentions_pre=pre, clauses_pre=cl)
@@ -499,222 +372,3 @@ def _blocks_to_arrow(pa, schema, blocks):
             ],
             schema=schema,
         )
-
-
-# ---------------------------------------------------------------------------
-# JVM-native extraction (no Python in the hot path)
-# ---------------------------------------------------------------------------
-# The pandas-UDF path above is the mandated/primary implementation
-# (input_hint: vectorized pandas/Arrow UDFs).  This variant expresses the
-# SAME frozen grammar with built-in SQL regex functions so the whole stage
-# stays inside whole-stage codegen.  Parity with the pandas path is asserted
-# in tests (identical triple/mention multisets).
-#
-# MEASURED (3M turns, local[16], steady state): pandas 370k turns/s vs
-# native 67k turns/s — java.util.regex backtracks badly on the ~2000-branch
-# gazetteer alternation, while Python's re handles it ~5x faster, and the
-# native plan re-evaluates each pattern per capture group.  The pandas path
-# is therefore the production default ON MERIT, not just by mandate; this
-# variant remains as a dependency-free fallback and a second implementation
-# that cross-checks the grammar.
-
-# THE SAME pattern strings the Python extractors compile (rules.*_SRC):
-# the grammar is written dialect-neutral — explicit Unicode-White_Space
-# classes and [A-Za-z0-9_] lookarounds instead of \s/\w/\b/\d, whose
-# membership differs between Python re and java.util.regex (rules.py
-# WS_CHARS comment; fuzz-pinned by test_fuzzed_three_way_extractor_parity)
-_NATIVE_ONTO = rules.ONTOLOGY_SRC
-_NATIVE_XREF = rules.XREF_SRC
-_NATIVE_RANK = rules.RANK_SRC
-_NATIVE_SYN = rules.SYNONYM_SRC
-
-
-def _native_norm(col):
-    return F.trim(F.regexp_replace(F.lower(col), rules.GAP_CLASS, " "))
-
-
-def _native_gazetteer_pattern(aliases: list[str]) -> str:
-    """Java-regex alternation over normalized aliases (same construction as
-    rules.build_gazetteer_regex, Java dialect)."""
-    import re as _re
-
-    norms = sorted(
-        {rules.normalize_alias(a) for a in aliases if a and a.strip()},
-        key=len,
-        reverse=True,
-    )
-    parts = [rules.GAP_CLASS.join(_re.escape(t) for t in n.split(" ")) for n in norms]
-    if not parts:
-        parts = [r"(?!x)x"]
-    return r"(?i)(?<![A-Za-z0-9])(" + "|".join(parts) + r")(?![A-Za-z0-9])"
-
-
-def extract_rows_native(
-    transcripts: DataFrame, aliases: list[str], kinds: tuple[str, ...] | None = None
-) -> DataFrame:
-    """Flat extraction rows (same schema as extract_rows) via built-in SQL
-    functions only — scan stays in whole-stage codegen end to end.
-    ``kinds`` drops whole union branches (the JVM analog of the Python-side
-    kind pushdown)."""
-    _validate_kinds(kinds)
-    gaz = _native_gazetteer_pattern(aliases)
-    text = F.col("text")
-    bad = text.isNull() | (text == "") | text.contains("\x00")
-
-    mentions = F.when(bad, F.array().cast("array<string>")).otherwise(
-        F.regexp_extract_all(text, F.lit(gaz), F.lit(1))
-    )
-    subj = F.when(F.size(mentions) > 0, _native_norm(F.element_at(mentions, 1)))
-
-    onto = F.transform(
-        F.regexp_extract_all(text, F.lit(_NATIVE_ONTO), F.lit(0)),
-        lambda m: F.struct(
-            F.upper(F.regexp_extract(m, _NATIVE_ONTO, 1)).alias("pred"),
-            F.concat_ws(
-                ":",
-                F.regexp_extract(m, _NATIVE_ONTO, 2),
-                F.regexp_extract(m, _NATIVE_ONTO, 3).cast("long").cast("string"),
-            ).alias("obj"),
-        ),
-    )
-    xref_raw = F.transform(
-        F.regexp_extract_all(text, F.lit(_NATIVE_XREF), F.lit(0)),
-        lambda m: F.struct(
-            F.regexp_extract(m, _NATIVE_XREF, 1).alias("k"),
-            F.regexp_extract(m, _NATIVE_XREF, 2).alias("v"),
-        ),
-    )
-    xref = F.transform(
-        F.filter(xref_raw, lambda s: ~s["k"].isin(*rules.XREF_DROP_KEYS)),
-        lambda s: F.struct(
-            F.lit(rules.PRED_XREF).alias("pred"),
-            F.concat_ws(
-                ":",
-                s["k"],
-                F.when(
-                    s["k"].isin(*rules.XREF_SPLIT_VALUE_KEYS),
-                    F.split(s["v"], " ", 2).getItem(0),
-                ).otherwise(s["v"]),
-            ).alias("obj"),
-        ),
-    )
-    rank = F.transform(
-        F.regexp_extract_all(text, F.lit(_NATIVE_RANK), F.lit(1)),
-        lambda m: F.struct(
-            F.lit(rules.PRED_RANK).alias("pred"), F.initcap(m).alias("obj")
-        ),
-    )
-    syn = F.transform(
-        F.regexp_extract_all(text, F.lit(_NATIVE_SYN), F.lit(1)),
-        lambda m: F.struct(
-            F.lit(rules.PRED_SYNONYM).alias("pred"), _native_norm(m).alias("obj")
-        ),
-    )
-    triples = F.when(
-        bad, F.array().cast("array<struct<pred:string,obj:string>>")
-    ).otherwise(F.concat(onto, xref, rank, syn))
-
-    base = transcripts.select(
-        "conv_id",
-        "turn_idx",
-        mentions.alias("_m"),
-        triples.alias("_t"),
-        subj.alias("_subj"),
-        bad.cast("int").alias("_err"),
-    )
-    turn_rows = base.select(
-        "conv_id",
-        "turn_idx",
-        F.lit("turn").alias("kind"),
-        F.lit(None).cast("string").alias("subj"),
-        F.lit(None).cast("string").alias("pred"),
-        F.lit(None).cast("string").alias("obj"),
-        F.lit(None).cast("string").alias("surface"),
-        F.size("_m").alias("n_mentions"),
-        F.size("_t").alias("n_triples"),
-        F.col("_err").alias("is_error"),
-    )
-    mention_rows = base.select(
-        "conv_id",
-        "turn_idx",
-        F.lit("mention").alias("kind"),
-        F.lit(None).cast("string").alias("subj"),
-        F.lit(None).cast("string").alias("pred"),
-        F.lit(None).cast("string").alias("obj"),
-        F.explode("_m").alias("surface"),
-        F.lit(0).alias("n_mentions"),
-        F.lit(0).alias("n_triples"),
-        F.lit(0).alias("is_error"),
-    )
-    triple_rows = base.select(
-        "conv_id",
-        "turn_idx",
-        F.lit("triple").alias("kind"),
-        F.col("_subj").alias("subj"),
-        F.explode("_t").alias("_tr"),
-        F.lit(None).cast("string").alias("surface"),
-        F.lit(0).alias("n_mentions"),
-        F.lit(0).alias("n_triples"),
-        F.lit(0).alias("is_error"),
-    ).select(
-        "conv_id", "turn_idx", "kind", "subj",
-        F.col("_tr.pred").alias("pred"), F.col("_tr.obj").alias("obj"),
-        "surface", "n_mentions", "n_triples", "is_error",
-    )
-    by_kind = {"turn": turn_rows, "mention": mention_rows, "triple": triple_rows}
-    wanted = [by_kind[k] for k in ("turn", "mention", "triple") if kinds is None or k in kinds]
-    out = wanted[0]
-    for w in wanted[1:]:
-        out = out.unionByName(w)
-    return out
-
-
-def make_extract_udf(aliases: list[str]):
-    """Build the Arrow-batched extraction UDF over a frozen alias list."""
-    alias_tuple = tuple(sorted(set(aliases)))
-
-    @F.pandas_udf(EXTRACT_SCHEMA)
-    def extract_udf(text: pd.Series) -> pd.DataFrame:
-        gaz = _gaz_for(alias_tuple)
-        mentions_col, triples_col, err_col = [], [], []
-        for t in text:
-            # per-record try/except: bad rows are skipped with a metric,
-            # never a job failure (GrameneMongoLoader.groovy:34-38)
-            try:
-                if t is None or t == "" or "\x00" in t:
-                    mentions_col.append([])
-                    triples_col.append([])
-                    err_col.append(1)
-                    continue
-                mentions, triples = rules.extract_turn(t, gaz)
-                mentions_col.append(mentions)
-                triples_col.append([(tr.subj, tr.pred, tr.obj) for tr in triples])
-                err_col.append(0)
-            except Exception:  # noqa: BLE001
-                mentions_col.append([])
-                triples_col.append([])
-                err_col.append(1)
-        return pd.DataFrame(
-            {"mentions": mentions_col, "triples": triples_col, "is_error": err_col}
-        )
-
-    return extract_udf
-
-
-def extract_triples(transcripts: DataFrame, aliases: list[str]) -> DataFrame:
-    """transcripts -> one row per extracted raw triple (+ provenance).
-
-    Narrow until here — the first shuffle in the pipeline is the linking
-    join; only triple rows cross the Arrow boundary (kind pushdown).
-    """
-    return triples_from_rows(extract_rows(transcripts, aliases, kinds=("triple",)))
-
-
-def extract_mentions(transcripts: DataFrame, aliases: list[str]) -> DataFrame:
-    """transcripts -> one row per mention: conv_id, turn_idx, surface, norm."""
-    return mentions_from_rows(extract_rows(transcripts, aliases, kinds=("mention",)))
-
-
-def extraction_metrics(transcripts: DataFrame, aliases: list[str]) -> DataFrame:
-    """Per-conversation error/extract counters (Importer.groovy:40-43 analog)."""
-    return metrics_from_rows(extract_rows(transcripts, aliases, kinds=("turn",)))

@@ -35,23 +35,35 @@ _ALIAS_MAP_SCHEMA = (
 )
 
 
-def local_alias_map_rows(dictionary_pdf) -> list[tuple] | None:
-    """Driver-side computation of alias_map()'s exact rows, or None when
-    byte-parity with the SQL path cannot be PROVEN for this input.
+def local_alias_map(dictionary_pdf) -> tuple[int | None, list[tuple] | None]:
+    """One driver-side pass over a local dictionary frame: ``(estimate,
+    rows)``, the alias map's broadcast-size estimate and alias_map()'s
+    exact rows.
 
     Used by pipeline.dictionary_to_spark: when the dictionary is already a
-    driver-local frame, running a Spark aggregation job (sort-agg + exchange
-    + broadcast build, ~0.3 s of jobs plus AQE stage latency per pipeline
-    run) to re-derive a map whose inputs sit in driver memory is pure
-    latency — the same reasoning as the driver-side size estimate above it.
+    driver-local frame, running Spark jobs to re-derive what its rows give
+    directly is pure latency — the size estimate that strategy='auto'
+    needs (one job), and the alias map itself (sort-agg + exchange +
+    broadcast build, ~0.3 s of jobs plus AQE stage latency per pipeline
+    run).
 
-    Parity argument, term by term against alias_map()'s expression:
+    ``estimate`` is estimate_alias_map_bytes's formula term for term
+    (parity-pinned by test_pipeline): alias octet lengths (NULL elements
+    count 0, as concat_ws skips them), the alias count (NULL elements
+    included, as size() counts them), the name/type payload repeated per
+    alias, x2 headroom and 64 B of map overhead per alias.  It is None
+    only when the frame has an unexpected shape.
+
+    ``rows`` is None when byte-parity with the SQL path cannot be PROVEN
+    for this input.  The two abort independently: an unprovable alias
+    drops the rows, never the estimate.  Parity argument, term by term
+    against alias_map()'s expression:
 
     * ``trim(regexp_replace(lower(alias), GAP_CLASS, ' '))`` ==
       ``rules.normalize_alias`` — the documented operation-for-operation
       mirror (rules.py), and ALREADY load-bearing for linking correctness:
       mention ``norm`` keys are computed with normalize_alias in the Python
-      extractors and joined against the SQL-computed ``alias_norm``, so any
+      extractor and joined against the SQL-computed ``alias_norm``, so any
       alias where the two dialects disagreed would fail to link today.
       Aliases are still required to be ASCII here (``str.isascii``) so the
       lower/regex/trim parity is provable rather than assumed — a non-ASCII
@@ -69,45 +81,77 @@ def local_alias_map_rows(dictionary_pdf) -> list[tuple] | None:
       ASCII, only the join-key aliases.
 
     Any unexpected shape (non-str alias, NaN/None field, exotic container)
-    aborts to None — the caller then simply leaves the Spark path in place.
-    So does a dictionary where no alias survives normalization: an empty
-    map has no aggregation worth skipping, and a local relation built from
-    an empty pandas frame is a conversion corner with nothing to gain.
+    aborts the rows to None — the caller then simply leaves the Spark path
+    in place.  So does a dictionary where no alias survives normalization:
+    an empty map has no aggregation worth skipping, and a local relation
+    built from an empty pandas frame is a conversion corner with nothing to
+    gain.
     """
+    alias_chars = n_aliases = payload_chars = 0
+    est_ok = True
+    best: dict[str, tuple] | None = {}
+    try:
+        for _, row in dictionary_pdf.iterrows():
+            if est_ok:
+                try:
+                    al = row["aliases"]
+                    al_full = list(al) if al is not None else []
+                    n_aliases += len(al_full)
+                    alias_chars += sum(
+                        len(a.encode()) for a in al_full if isinstance(a, str)
+                    )
+                    name, etype = row["canonical_name"], row["entity_type"]
+                    payload_chars += len(al_full) * (
+                        (len(name.encode()) if isinstance(name, str) else 0)
+                        + (len(etype.encode()) if isinstance(etype, str) else 0)
+                    )
+                except Exception:  # noqa: BLE001 — estimate via the Spark job
+                    est_ok = False
+            if best is not None:
+                try:
+                    if not _fold_alias_row(best, row):
+                        best = None
+                except Exception:  # noqa: BLE001 — parity not provable
+                    best = None
+            if not est_ok and best is None:
+                break
+    except Exception:  # noqa: BLE001 — not a frame we can walk
+        return None, None
+    est = int(2 * (alias_chars + payload_chars) + 64 * n_aliases) if est_ok else None
+    rows = ([(k, *v) for k, v in best.items()] or None) if best is not None else None
+    return est, rows
+
+
+def _fold_alias_row(best: dict[str, tuple], row) -> bool:
+    """Fold one dictionary row into ``best`` (alias_norm -> min payload
+    tuple); False when the row makes SQL parity unprovable."""
     import numpy as np
 
-    from . import rules
-
-    try:
-        best: dict[str, tuple] = {}
-        for _, row in dictionary_pdf.iterrows():
-            al = row["aliases"]
-            if al is None:
-                continue
-            eid, name = row["entity_id"], row["canonical_name"]
-            etype, hot = row["entity_type"], row["is_hot"]
-            # bool is an int subclass; reject it for entity_id explicitly
-            if isinstance(eid, bool) or not isinstance(eid, (int, np.integer)):
-                return None
-            if not isinstance(name, str) or not isinstance(etype, str):
-                return None
-            if not isinstance(hot, (bool, np.bool_)):
-                return None
-            tup = (int(eid), str(name), str(etype), bool(hot))
-            for a in al:
-                if a is None:
-                    continue
-                if not isinstance(a, str) or not a.isascii():
-                    return None
-                norm = rules.normalize_alias(a)
-                if norm == "":
-                    continue
-                cur = best.get(norm)
-                if cur is None or tup < cur:
-                    best[norm] = tup
-        return [(k, *v) for k, v in best.items()] or None
-    except Exception:  # noqa: BLE001 — parity not provable -> Spark path
-        return None
+    al = row["aliases"]
+    if al is None:
+        return True
+    eid, name = row["entity_id"], row["canonical_name"]
+    etype, hot = row["entity_type"], row["is_hot"]
+    # bool is an int subclass; reject it for entity_id explicitly
+    if isinstance(eid, bool) or not isinstance(eid, (int, np.integer)):
+        return False
+    if not isinstance(name, str) or not isinstance(etype, str):
+        return False
+    if not isinstance(hot, (bool, np.bool_)):
+        return False
+    tup = (int(eid), str(name), str(etype), bool(hot))
+    for a in al:
+        if a is None:
+            continue
+        if not isinstance(a, str) or not a.isascii():
+            return False
+        norm = rules.normalize_alias(a)
+        if norm == "":
+            continue
+        cur = best.get(norm)
+        if cur is None or tup < cur:
+            best[norm] = tup
+    return True
 
 
 def alias_map(dictionary: DataFrame) -> DataFrame:

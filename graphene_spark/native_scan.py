@@ -9,8 +9,8 @@ objects, no per-turn call overhead.  Profiled at ~26% of extraction-stage CPU
 (BENCH/NOTES.md), the regex scan is the single largest line item; the C walk
 removes the sre bytecode-interpreter constant from it.
 
-Parity contract (pinned by tests/test_native_scan.py and the three-way fuzz
-test in tests/test_extract.py):
+Parity contract (pinned by tests/test_native_scan.py and the extraction
+fuzz test in tests/test_extract.py):
 
 * The scanner is used ONLY for rows whose UTF-8 bytes are all < 0x80.  Any
   non-ASCII byte flags the row for the caller's regex fallback, because
@@ -28,7 +28,7 @@ test in tests/test_extract.py):
 
 Everything degrades gracefully: no gcc / failed compile / env kill-switch
 ``GRAPHENE_SPARK_NO_NATIVE_SCAN=1`` -> ``scanner_for`` returns None and the
-extractors use the regex for every row (the round-5 behavior).  On a real
+extractor uses the regex for every row (the round-5 behavior).  On a real
 cluster each executor host compiles once into its local tmp dir (content-
 hash-keyed, atomic rename, multi-process safe).
 """
@@ -312,7 +312,7 @@ class AsciiGazetteerScanner:
 
         n = len(arr)
         if n == 0:
-            return ([], []) if with_grammar else []
+            return ([], ([], _NO_COLS)) if with_grammar else []
         if texts is None:
             texts = arr.to_pylist()
 
@@ -541,7 +541,7 @@ class AsciiGazetteerScanner:
         )
 
     def scan_texts(self, texts: list) -> list:
-        """List-of-str convenience wrapper (pandas path / tests)."""
+        """List-of-str convenience wrapper (tests)."""
         import pyarrow as pa
 
         try:
@@ -552,7 +552,7 @@ class AsciiGazetteerScanner:
 
     def scan_texts_full(self, texts: list) -> tuple:
         """List-of-str convenience wrapper for the full (mentions+clauses)
-        scan (pandas path / tests)."""
+        scan (tests)."""
         import pyarrow as pa
 
         try:

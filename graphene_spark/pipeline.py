@@ -1,13 +1,14 @@
 """End-to-end KG construction pipeline (the Importer.go analog).
 
-transcripts -> stable order (W1) -> Arrow-vectorized extraction (mapInArrow
-default; pandas/native variants selectable) -> linking (J3)
--> node/edge build (A1-A3, A7, J2) -> materialize with lineage.
+transcripts -> Arrow-vectorized extraction (extract.extract_rows_arrow,
+mapInArrow) -> linking (J3) -> node/edge build (A1-A3, A7, J2).  job.py adds
+the merge sink with lineage on top.
 
 The reference runs ten loaders sequentially (Importer.groovy:21-24,38-44);
 here every stage is a DataFrame, so the DAG scheduler parallelizes whatever
-is independent, and the extraction UDF runs ONCE (cached) with mentions,
-triples, and error metrics all derived from its output.
+is independent.  The extraction is deliberately NOT cached: each output
+(triples, mentions, metrics) re-runs the narrow extraction stage with only
+its own row kind pushed inside it (see run_pipeline).
 """
 
 from __future__ import annotations
@@ -23,39 +24,19 @@ def dictionary_to_spark(spark: SparkSession, dictionary_pdf) -> DataFrame:
         dictionary_pdf,
         schema="entity_id long, canonical_name string, aliases array<string>, entity_type string, is_hot boolean",
     )
-    # The full dictionary is ALREADY on the driver here, so compute the
-    # broadcast-size estimate that strategy='auto' needs directly — the
-    # same formula as linking.estimate_alias_map_bytes (octet lengths,
-    # x2 headroom, 64 B/alias map overhead; parity-pinned by
-    # test_pipeline) — and stamp the memo the resolver reads.  This takes
-    # the one Spark job 'auto' cost out of every pipeline run on this
-    # path; dictionaries too large to pass through a driver-side pandas
-    # frame never come this way and keep the distributed estimate.
-    try:
-        alias_chars = n_aliases = payload_chars = 0
-        for _, row in dictionary_pdf.iterrows():
-            al_full = list(row["aliases"]) if row["aliases"] is not None else []
-            # n_aliases counts NULL elements too (Spark's size() does);
-            # alias_chars skips them (concat_ws does) — formula parity
-            n_aliases += len(al_full)
-            alias_chars += sum(len(a.encode()) for a in al_full if isinstance(a, str))
-            name = row["canonical_name"]
-            etype = row["entity_type"]
-            payload_chars += len(al_full) * (
-                (len(name.encode()) if isinstance(name, str) else 0)
-                + (len(etype.encode()) if isinstance(etype, str) else 0)
-            )
-        df._gs_alias_map_bytes = int(2 * (alias_chars + payload_chars) + 64 * n_aliases)
-    except Exception:  # noqa: BLE001 — estimation falls back to the Spark job
-        pass
-    # Same driver-is-already-holding-the-data reasoning for the alias MAP
-    # itself: when byte-parity with the SQL normalization/dedup is provable
-    # for this input (ASCII aliases, no NULL fields — see
-    # linking.local_alias_map_rows), stamp the precomputed rows so
-    # linking.alias_map serves a local relation instead of running an
-    # aggregation job + broadcast build per pipeline run.  Unprovable
-    # inputs get no stamp and keep the Spark path unchanged.
-    rows = linking.local_alias_map_rows(dictionary_pdf)
+    # The full dictionary is ALREADY on the driver here, so one local pass
+    # (linking.local_alias_map) gives what linking would otherwise run Spark
+    # jobs for: the broadcast-size estimate that strategy='auto' needs, and
+    # — when byte-parity with the SQL normalization/dedup is provable (ASCII
+    # aliases, no NULL fields) — the alias map's rows, which
+    # linking.alias_map then serves as a local relation instead of an
+    # aggregation job + broadcast build.  Whatever the pass cannot give is
+    # left unstamped and linking computes it in Spark as before;
+    # dictionaries too large to pass through a driver-side pandas frame
+    # never come this way.
+    est, rows = linking.local_alias_map(dictionary_pdf)
+    if est is not None:
+        df._gs_alias_map_bytes = est
     if rows is not None:
         df._gs_alias_map_rows = rows
     return df
@@ -132,17 +113,16 @@ def run_pipeline(
     link_strategy: str = "auto",
     fuzzy_threshold: float | None = None,
     canonicalize_dictionary: bool = False,
-    extractor: str = "arrow",
 ) -> dict:
     """Run extraction+linking+graph build; returns dict of DataFrames + counters.
 
     Plan shape (the one we want at 100 TB):
-      scan -> [narrow] pandas UDF extract -> explode       (no shuffle)
+      scan -> [narrow] mapInArrow extract                  (no shuffle)
       -> broadcast join vs alias map                        (no shuffle)
       -> groupBy(subj,pred,obj) dedup                       (1 shuffle, AQE-coalesced)
       -> node/edge groupBy + broadcast id joins             (1 shuffle each)
     """
-    # the extraction stage runs pandas UDFs that unpickle this package on
+    # the extraction stage runs a mapInArrow UDF that unpickles this package on
     # executor workers — ship it for ANY session (idempotent; get_spark does
     # this too, but run_pipeline is public API and must work on a session the
     # caller built with a plain SparkSession.builder)
@@ -183,23 +163,6 @@ def run_pipeline(
             )
         )
 
-    # extractor="arrow" (default): mapInArrow extraction — row-for-row
-    # identical to the pandas path (test_extract.py::test_arrow_extraction_parity)
-    # but skips the pandas materialization on both ends of every batch,
-    # which cuts the Arrow-transfer memory traffic that bounds large-N
-    # scaling on a shared DRAM bus (BENCH/BASELINE.md analysis).
-    extractors = {
-        "arrow": extract.extract_rows_arrow,
-        "pandas": extract.extract_rows,
-        "native": extract.extract_rows_native,
-    }
-    if extractor not in extractors:
-        # fail fast with context — a bare KeyError('arow') gives the caller
-        # no hint of the valid options (same contract as _validate_kinds)
-        raise ValueError(
-            f"unknown extractor {extractor!r}: expected one of {sorted(extractors)}"
-        )
-    extract_fn = extractors[extractor]
     # resolve 'auto' ONCE for both link calls (the resolution is a small
     # Spark job; linking.resolve_link_strategy memoizes the size estimate
     # per dictionary frame, this keeps even the conf lookup single)
@@ -213,17 +176,19 @@ def run_pipeline(
     # mention branch no triple rows, etc.  Recomputation was already the
     # deliberate trade (see the non-persist note above); the pushdown makes
     # each recompute strictly cheaper than filtering the full frame.
+    # extract.extract_rows_arrow is looked up on the module at call time, so
+    # a wrapper installed there (perfbench's tracing) sees every extraction.
     def b_extracted(o):
-        o["extracted"] = extract_fn(transcripts, aliases)
+        o["extracted"] = extract.extract_rows_arrow(transcripts, aliases)
 
     def b_raw_triples(o):
         o["raw_triples"] = extract.triples_from_rows(
-            extract_fn(transcripts, aliases, kinds=("triple",))
+            extract.extract_rows_arrow(transcripts, aliases, kinds=("triple",))
         )
 
     def b_mentions(o):
         o["mentions"] = extract.mentions_from_rows(
-            extract_fn(transcripts, aliases, kinds=("mention",))
+            extract.extract_rows_arrow(transcripts, aliases, kinds=("mention",))
         )
 
     def b_link_triples(o):
@@ -246,7 +211,7 @@ def run_pipeline(
 
     def b_metrics(o):
         o["metrics"] = extract.metrics_from_rows(
-            extract_fn(transcripts, aliases, kinds=("turn",))
+            extract.extract_rows_arrow(transcripts, aliases, kinds=("turn",))
         )
 
     out = _LazyOutputs(

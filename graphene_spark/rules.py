@@ -5,7 +5,9 @@ This module is shared by three consumers so the P/R comparison is meaningful:
 1. ``datagen.py``  — emits transcript text *containing* these patterns;
 2. ``oracle.py``   — the frozen single-process reference walker (the analog of
    the reference's row-at-a-time cursor walk, GrameneMongoLoader.groovy:30-43);
-3. ``extract.py``  — the distributed pandas-UDF extractor.
+3. ``extract.py``  — the distributed mapInArrow extractor.  Its C scanner
+   (``native_scan.py``) only finds the matches; every transform is the code
+   below.
 
 Pattern provenance (reference semantics, re-expressed — not copied):
 
@@ -50,8 +52,12 @@ from typing import NamedTuple
 # never uses \s/\w/\b/\d — whitespace is the explicit Unicode White_Space
 # enumeration below and word boundaries are explicit [A-Za-z0-9_]
 # lookarounds, so the SAME pattern STRING compiles to the SAME language in
-# both engines.  Fuzz-pinned across all three extractors + the oracle by
-# tests/test_extract.py::test_fuzzed_three_way_extractor_parity.
+# both engines.  GAP_CLASS is the one that runs in both: normalize_alias
+# here, and Spark SQL in extract.mentions_from_rows and linking.alias_map
+# (pinned by tests/test_extract.py::
+# test_whitespace_class_aligned_across_dialects); the hostile-text fuzz
+# (tests/test_extract.py::test_fuzzed_extraction_matches_rules) covers the
+# rest.
 WS_CHARS = (
     r"\t\n\x0B\f\r \x85\xA0"
     r"\u1680\u2000-\u200A\u2028\u2029\u202F\u205F\u3000"
@@ -61,8 +67,9 @@ GAP_CLASS = f"[{WS_CHARS}_\\-]+"  # the alias token separator: whitespace/_/-
 _NW = "(?<![A-Za-z0-9_])"  # ASCII left word boundary (dialect-neutral \b)
 
 # --- frozen patterns ---------------------------------------------------------
-# The *_SRC strings are shared verbatim with the JVM-native extractor
-# (extract.py) — one source of truth per clause, two compilers.
+# One *_SRC string per clause.  native/acscan.c's gs_scan_grammar parses
+# the same four languages by hand (hand- and fuzz-pinned against these
+# compiled patterns in tests/test_native_scan.py).
 
 ONTOLOGY_SRC = _NW + r"([a-z_]+) ([A-Z][A-Z0-9]{1,9}):0*([0-9]+) ! ([^.;|\n]*)"
 ONTOLOGY_RELATIONSHIP_PATTERN = re.compile(ONTOLOGY_SRC)
@@ -280,8 +287,8 @@ def extract_turn_from_clauses(
     scan pre-strips the ``0*`` zeros, so the slice equals ``int(g3)``'s
     decimal form, one '0' kept for all-zero ids), the XREF drop/split key
     sets, rank .capitalize(), synonym normalize_alias.  Byte-equal output
-    is pinned by tests/test_native_scan.py (hand + fuzz) and the three-way
-    extractor fuzz in tests/test_extract.py."""
+    is pinned by tests/test_native_scan.py (hand + fuzz) and the extraction
+    fuzz in tests/test_extract.py."""
     subj = normalize_alias(mentions[0]) if mentions else None
     triples: list[Triple] = []
     ap = triples.append

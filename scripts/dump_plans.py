@@ -43,11 +43,10 @@ def main() -> None:
     rows = extract.extract_rows_arrow(tdf, aliases)
     out.write(
         "## 1. Extraction — one narrow stage, no shuffle\n\n"
-        "Property: scan -> MapInArrow only (the round-4 pipeline default —\n"
-        "skips pandas materialization on both ends of every batch; the pandas\n"
-        "mapInPandas variant is row-identical and remains available via\n"
-        "run_pipeline(extractor='pandas')).  No Exchange appears before\n"
-        "linking; Arrow transfer uses flat columns.\n\n```\n" + fmt(rows) + "\n```\n\n"
+        "Property: scan -> MapInArrow only (the pipeline's one extraction\n"
+        "stage — no pandas materialization on either end of a batch).  No\n"
+        "Exchange appears before linking; Arrow transfer uses flat columns.\n\n"
+        "```\n" + fmt(rows) + "\n```\n\n"
     )
 
     mentions = extract.mentions_from_rows(rows)
@@ -69,7 +68,7 @@ def main() -> None:
         "this means a dictionary that outgrows executor memory degrades to the\n"
         "skew-safe shuffle plan by itself instead of OOMing the broadcast build.\n\n"
         "Round 7: for DRIVER-LOCAL dictionaries with provable normalization\n"
-        "parity (``linking.local_alias_map_rows``), the alias map is served as a\n"
+        "parity (``linking.local_alias_map``), the alias map is served as a\n"
         "local relation — the broadcast build side below is a bare\n"
         "LocalTableScan with no aggregation job; parquet-backed dictionaries\n"
         "keep the distributed aggregation + salted-join options unchanged.\n\n```\n"

@@ -78,12 +78,13 @@ def test_stable_order_invariant(spark, transcripts_df, transcripts_pdf):
 def test_spark_extraction_matches_oracle_walker(
     spark, transcripts_df, transcripts_pdf, dictionary_pdf
 ):
-    """The distributed pandas-UDF extractor and the frozen single-process
+    """The distributed mapInArrow extractor and the frozen single-process
     walker agree on the raw triple multiset (exact, not just P/R>=0.95)."""
     aliases = all_aliases(dictionary_pdf)
     spark_raw = (
-        extract.extract_triples(transcripts_df, aliases)
-        .select("conv_id", "turn_idx", "subj", "pred", "obj")
+        extract.triples_from_rows(
+            extract.extract_rows_arrow(transcripts_df, aliases, kinds=("triple",))
+        )
         .toPandas()
     )
     gaz = rules.build_gazetteer_regex(aliases)
@@ -103,35 +104,10 @@ def test_spark_extraction_matches_oracle_walker(
     )
 
 
-def test_native_extraction_parity(spark, transcripts_df, dictionary_pdf):
-    """The JVM-native extractor and the pandas-UDF extractor agree exactly on
-    triples, mentions, and error counts (same frozen grammar, two engines)."""
-    aliases = all_aliases(dictionary_pdf)
-    py_rows = extract.extract_rows(transcripts_df, aliases)
-    nv_rows = extract.extract_rows_native(transcripts_df, aliases)
-
-    key = ["conv_id", "turn_idx", "subj", "pred", "obj"]
-    pt = extract.triples_from_rows(py_rows).toPandas().sort_values(key, kind="mergesort")
-    nt = extract.triples_from_rows(nv_rows).toPandas().sort_values(key, kind="mergesort")
-    pd.testing.assert_frame_equal(
-        pt.reset_index(drop=True).astype(str), nt.reset_index(drop=True).astype(str)
-    )
-
-    mkey = ["conv_id", "turn_idx", "surface", "norm"]
-    pm = extract.mentions_from_rows(py_rows).toPandas().sort_values(mkey, kind="mergesort")
-    nm = extract.mentions_from_rows(nv_rows).toPandas().sort_values(mkey, kind="mergesort")
-    pd.testing.assert_frame_equal(
-        pm.reset_index(drop=True).astype(str), nm.reset_index(drop=True).astype(str)
-    )
-
-    pe = extract.metrics_from_rows(py_rows).agg(F.sum("n_error_turns")).collect()[0][0]
-    ne = extract.metrics_from_rows(nv_rows).agg(F.sum("n_error_turns")).collect()[0][0]
-    assert pe == ne
-
-
 def test_error_turns_counted_not_fatal(spark, transcripts_df, transcripts_pdf, dictionary_pdf):
     aliases = all_aliases(dictionary_pdf)
-    m = extract.extraction_metrics(transcripts_df, aliases).agg(
+    rows = extract.extract_rows_arrow(transcripts_df, aliases, kinds=("turn",))
+    m = extract.metrics_from_rows(rows).agg(
         F.sum("n_error_turns").alias("e"), F.sum("n_turns").alias("t")
     ).collect()[0]
     n_bad = sum(1 for t in transcripts_pdf["text"] if not t or "\x00" in t)
@@ -139,24 +115,10 @@ def test_error_turns_counted_not_fatal(spark, transcripts_df, transcripts_pdf, d
     assert m["t"] == len(transcripts_pdf)
 
 
-def test_arrow_extraction_parity(spark, transcripts_pdf, dictionary_pdf):
-    """mapInArrow variant must produce row-for-row identical output to the
-    pandas path (hash + count over every column)."""
-    tdf = spark.createDataFrame(transcripts_pdf)
-    aliases = all_aliases(dictionary_pdf)
-    cols = "conv_id, turn_idx, kind, subj, pred, obj, surface, n_mentions, n_triples, is_error"
-    sig = lambda df: df.selectExpr(  # noqa: E731
-        f"bit_xor(xxhash64({cols})) AS h", "count(*) AS n"
-    ).collect()[0]
-    a = sig(extract.extract_rows_arrow(tdf, aliases))
-    b = sig(extract.extract_rows(tdf, aliases))
-    assert (a["h"], a["n"]) == (b["h"], b["n"])
-
-
 def test_null_turn_idx_is_metric_not_crash(spark, dictionary_pdf):
     """A NULL turn_idx must become an error-metric row (contract: bad rows
-    are skipped with a metric, never a job failure) — int(NaN/None) raised
-    before the try block in both extraction paths."""
+    are skipped with a metric, never a job failure) — int(None) once
+    raised before the try block."""
     from graphene_spark import pipeline
 
     tdf = spark.createDataFrame(
@@ -165,27 +127,25 @@ def test_null_turn_idx_is_metric_not_crash(spark, dictionary_pdf):
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
     aliases = pipeline.all_aliases(dictionary_pdf)
-    for fn in (extract.extract_rows, extract.extract_rows_arrow):
-        rows = fn(tdf, aliases)
-        errs = rows.filter("kind = 'turn' and is_error = 1").collect()
-        assert len(errs) == 1 and errs[0]["turn_idx"] == -1
-        assert rows.filter("kind = 'triple'").count() == 1
+    rows = extract.extract_rows_arrow(tdf, aliases)
+    errs = rows.filter("kind = 'turn' and is_error = 1").collect()
+    assert len(errs) == 1 and errs[0]["turn_idx"] == -1
+    assert rows.filter("kind = 'triple'").count() == 1
 
 
 def test_native_word_boundary_parity():
-    """Word-prefixed keywords must NOT match: the native Java patterns carry
-    the same \\b anchors as the frozen rules patterns."""
+    """Word-prefixed keywords must NOT match: every clause pattern string
+    carries the dialect-neutral left word boundary (rules._NW)."""
     import re
 
-    # direct pattern checks (Java and Python dialects agree on \b here)
-    assert re.search(extract._NATIVE_ONTO, "word is_a GO:0001 ! y")
-    assert not re.search(extract._NATIVE_ONTO, "Xis_a GO:0001 ! y")
-    assert re.search(extract._NATIVE_XREF, "has xref GO:12.")
-    assert not re.search(extract._NATIVE_XREF, "Pxref GO:12.")
-    assert re.search(extract._NATIVE_RANK, "so has_rank NCBITaxon:species here")
-    assert not re.search(extract._NATIVE_RANK, "Xhas_rank NCBITaxon:species")
-    assert re.search(extract._NATIVE_SYN, "a synonym: foo.")
-    assert not re.search(extract._NATIVE_SYN, "Xsynonym: foo.")
+    assert re.search(rules.ONTOLOGY_SRC, "word is_a GO:0001 ! y")
+    assert not re.search(rules.ONTOLOGY_SRC, "Xis_a GO:0001 ! y")
+    assert re.search(rules.XREF_SRC, "has xref GO:12.")
+    assert not re.search(rules.XREF_SRC, "Pxref GO:12.")
+    assert re.search(rules.RANK_SRC, "so has_rank NCBITaxon:species here")
+    assert not re.search(rules.RANK_SRC, "Xhas_rank NCBITaxon:species")
+    assert re.search(rules.SYNONYM_SRC, "a synonym: foo.")
+    assert not re.search(rules.SYNONYM_SRC, "Xsynonym: foo.")
 
 
 def test_whitespace_class_aligned_across_dialects(spark):
@@ -229,8 +189,9 @@ def test_whitespace_class_aligned_across_dialects(spark):
 
 
 def test_kind_pushdown_equals_post_filter(spark, dictionary_pdf, transcripts_df):
-    """kinds=(k,) inside the Python/JVM stage must equal filtering the full
-    frame on kind — for every kind, across all three extractors."""
+    """kinds=(k,) inside the Python stage must equal filtering the full
+    frame on kind — for every kind ('triple' takes the scan_triples_arrow
+    fast path when the C scanner is available)."""
     from graphene_spark import pipeline
 
     aliases = pipeline.all_aliases(dictionary_pdf)
@@ -240,45 +201,48 @@ def test_kind_pushdown_equals_post_filter(spark, dictionary_pdf, transcripts_df)
         r = df.selectExpr(f"bit_xor(xxhash64({cols})) AS h", "count(*) AS n").collect()[0]
         return (r["h"], r["n"])
 
-    for fn in (extract.extract_rows, extract.extract_rows_arrow, extract.extract_rows_native):
-        full = fn(transcripts_df, aliases)
-        for kind in ("turn", "mention", "triple"):
-            pushed = fn(transcripts_df, aliases, kinds=(kind,))
-            assert sig(pushed) == sig(full.filter(F.col("kind") == kind)), (fn.__name__, kind)
+    full = extract.extract_rows_arrow(transcripts_df, aliases)
+    for kind in ("turn", "mention", "triple"):
+        pushed = extract.extract_rows_arrow(transcripts_df, aliases, kinds=(kind,))
+        assert sig(pushed) == sig(full.filter(F.col("kind") == kind)), kind
 
 
 def test_kinds_validation_fails_fast(spark, dictionary_pdf, transcripts_df):
-    """A misspelled or empty kinds tuple must raise on ALL three extractors
-    (previously: silent empty output on pandas/arrow, IndexError on native)."""
+    """A misspelled or empty kinds tuple must raise at plan time (previously:
+    a silently empty extraction)."""
     import pytest
 
     from graphene_spark import pipeline
 
     aliases = pipeline.all_aliases(dictionary_pdf)
-    for fn in (extract.extract_rows, extract.extract_rows_arrow, extract.extract_rows_native):
-        with pytest.raises(ValueError, match="non-empty subset"):
-            fn(transcripts_df, aliases, kinds=("triples",))  # plural typo
-        with pytest.raises(ValueError, match="non-empty subset"):
-            fn(transcripts_df, aliases, kinds=())
+    with pytest.raises(ValueError, match="non-empty subset"):
+        extract.extract_rows_arrow(transcripts_df, aliases, kinds=("triples",))  # plural typo
+    with pytest.raises(ValueError, match="non-empty subset"):
+        extract.extract_rows_arrow(transcripts_df, aliases, kinds=())
 
 
-def test_fuzzed_three_way_extractor_parity(spark, dictionary_pdf):
-    """Seeded random-text property fuzz (round-4 VERDICT task #5): the
-    pandas, arrow, and JVM-native extractors and the frozen single-process
-    oracle walker must produce IDENTICAL triple/mention multisets on hostile
-    text — the historical divergence class U+001C-1F, NBSP/NEL and exotic
+def test_fuzzed_extraction_matches_rules(spark, dictionary_pdf):
+    """Seeded random-text property fuzz (round-4 VERDICT task #5): on 10k
+    hostile turns, extract_rows_arrow's FULL output (all ten columns, turn
+    metric rows included) must equal rows built from the frozen
+    ``rules.extract_turn`` — and so must the ``kinds=('triple',)`` fast
+    path's triple rows and the Spark-SQL mention ``norm`` keys.  Hostile
+    means: the historical divergence class U+001C-1F, NBSP/NEL and exotic
     Unicode whitespace, non-ASCII words butted against grammar keywords
-    (\\b/\\w/\\d dialect traps), embedded single/double quotes and
-    backslashes, null/empty/NUL-bearing turns, and alias surfaces with
-    every separator variant.  10k turns; any dialect drift in rules.py's
-    shared pattern strings fails here with the offending class visible.
+    (\\b/\\w/\\d dialect traps; such rows take the per-row regex
+    fallback), embedded single/double quotes and backslashes,
+    null/empty/NUL-bearing turns and NULL turn_idx values (both become
+    ``is_error=1`` turn rows), and alias surfaces with every separator
+    variant.  Any drift between the C scanner, the emit loops and the
+    frozen grammar fails here with the offending rows visible.
 
     Deliberately excluded: characters whose UNICODE case-folding maps into
     ASCII (Kelvin sign, long s) — the gazetteer's case-insensitivity is
-    ASCII-scoped by construction (aliases are ASCII; Python IGNORECASE is
-    Unicode-aware, Java (?i) is ASCII-only), documented in rules.py.
+    ASCII-scoped by construction (aliases are ASCII), documented in
+    rules.py.
     """
     import random
+    from collections import Counter
 
     rng = random.Random(0x5EED5)
     aliases = all_aliases(dictionary_pdf)
@@ -337,49 +301,67 @@ def test_fuzzed_three_way_extractor_parity(spark, dictionary_pdf):
                              rng.choice(["тест", "naïve"])])  # keyword-adjacent non-ASCII
         return prefix + glue.join(parts) + rng.choice(["", ".", " ;", " tail"])
 
-    rows = [(f"c{i % 400}", i // 400, turn_text()) for i in range(10_000)]
+    # every 997th turn has a NULL turn_idx (chosen by index, so the text
+    # stream is the same seeded sequence as without them)
+    rows = [
+        (f"c{i % 400}", None if i % 997 == 0 else i // 400, turn_text())
+        for i in range(10_000)
+    ]
     tdf = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string").persist()
 
-    # 1. three-way engine parity: full-row signature over every output row
-    cols = "conv_id, turn_idx, kind, subj, pred, obj, surface, n_mentions, n_triples, is_error"
-    sig = lambda df: df.selectExpr(  # noqa: E731
-        f"bit_xor(xxhash64({cols})) AS h", "count(*) AS n"
-    ).collect()[0]
-    s_pd = sig(extract.extract_rows(tdf, aliases))
-    s_ar = sig(extract.extract_rows_arrow(tdf, aliases))
-    s_nv = sig(extract.extract_rows_native(tdf, aliases))
-    assert (s_pd["h"], s_pd["n"]) == (s_ar["h"], s_ar["n"]), "pandas vs arrow drift"
-    assert (s_pd["h"], s_pd["n"]) == (s_nv["h"], s_nv["n"]), "pandas vs native drift"
-
-    # 2. oracle parity: triple AND mention multisets vs the frozen walker
-    from collections import Counter
-
+    # expected output rows, built from the frozen single-process grammar
+    # with extract_rows_arrow's bad-row contract: NULL/empty/NUL text or a
+    # NULL turn_idx (reported as -1) -> one is_error=1 turn row, nothing else
     gaz = rules.build_gazetteer_regex(aliases)
-    exp_triples, exp_mentions = Counter(), Counter()
+    exp_rows, exp_mentions = [], Counter()
     for conv_id, turn_idx, text in rows:
-        if not text or "\x00" in text:
+        if turn_idx is None or not text or "\x00" in text:
+            turn = -1 if turn_idx is None else turn_idx
+            exp_rows.append((conv_id, turn, "turn", None, None, None, None, 0, 0, 1))
             continue
         mentions, triples = rules.extract_turn(text, gaz)
-        for t in triples:
-            exp_triples[(conv_id, turn_idx, t.subj, t.pred, t.obj)] += 1
+        exp_rows.append(
+            (conv_id, turn_idx, "turn", None, None, None, None,
+             len(mentions), len(triples), 0)
+        )
         for m in mentions:
+            exp_rows.append((conv_id, turn_idx, "mention", None, None, None, m, 0, 0, 0))
             exp_mentions[(conv_id, turn_idx, m, rules.normalize_alias(m))] += 1
+        for t in triples:
+            exp_rows.append(
+                (conv_id, turn_idx, "triple", t.subj, t.pred, t.obj, None, 0, 0, 0)
+            )
+    expected = spark.createDataFrame(exp_rows, extract.EXTRACT_ROWS_SCHEMA).persist()
 
-    py_rows = extract.extract_rows(tdf, aliases)
-    got_triples = Counter(
-        (r["conv_id"], r["turn_idx"], r["subj"], r["pred"], r["obj"])
-        for r in extract.triples_from_rows(py_rows).collect()
-    )
-    got_mentions = Counter(
-        (r["conv_id"], r["turn_idx"], r["surface"], r["norm"])
-        for r in extract.mentions_from_rows(py_rows).collect()
-    )
-    tdf.unpersist()
-    assert got_triples == exp_triples, (
-        f"triple drift: only-spark={list((got_triples - exp_triples).items())[:3]} "
-        f"only-oracle={list((exp_triples - got_triples).items())[:3]}"
-    )
-    assert got_mentions == exp_mentions, (
-        f"mention drift: only-spark={list((got_mentions - exp_mentions).items())[:3]} "
-        f"only-oracle={list((exp_mentions - got_mentions).items())[:3]}"
-    )
+    def assert_same(got, exp, what):
+        # multiset equality: exceptAll keeps duplicates, both directions
+        only_got = got.exceptAll(exp).limit(3).collect()
+        only_exp = exp.exceptAll(got).limit(3).collect()
+        assert not only_got and not only_exp, (
+            f"{what} drift: only-spark={only_got} only-rules={only_exp}"
+        )
+
+    try:
+        # 1. the full output, every kind
+        assert_same(extract.extract_rows_arrow(tdf, aliases), expected, "full-row")
+        # 2. the triples-only fast path (scan_triples_arrow) on the same text
+        assert_same(
+            extract.extract_rows_arrow(tdf, aliases, kinds=("triple",)),
+            expected.filter(F.col("kind") == "triple"),
+            "triples fast path",
+        )
+        # 3. mention norm keys: Spark SQL's GAP_CLASS normalization vs
+        #    rules.normalize_alias on hostile surfaces
+        got_mentions = Counter(
+            (r["conv_id"], r["turn_idx"], r["surface"], r["norm"])
+            for r in extract.mentions_from_rows(
+                extract.extract_rows_arrow(tdf, aliases, kinds=("mention",))
+            ).collect()
+        )
+        assert got_mentions == exp_mentions, (
+            f"mention drift: only-spark={list((got_mentions - exp_mentions).items())[:3]} "
+            f"only-rules={list((exp_mentions - got_mentions).items())[:3]}"
+        )
+    finally:
+        tdf.unpersist()
+        expected.unpersist()

@@ -3,9 +3,9 @@
 The contract: for every pure-ASCII row, the scanner's mention list is
 byte-identical to ``rules.build_gazetteer_regex(...).finditer`` output; any
 row with a non-ASCII byte is flagged for the regex fallback (None).  The
-three-way extractor fuzz test in test_extract.py additionally pins the full
-pipeline output (the arrow/pandas extractors now run the scanner when
-available) against the frozen regex-only oracle.
+extraction fuzz test in test_extract.py additionally pins the full
+extract_rows_arrow output (which runs the scanner when available) against
+the frozen regex-only grammar.
 """
 
 from __future__ import annotations
@@ -116,21 +116,6 @@ def test_large_string_arrays(scanner, gaz):
 def test_kill_switch(monkeypatch):
     monkeypatch.setenv("GRAPHENE_SPARK_NO_NATIVE_SCAN", "1")
     assert native_scan.scanner_for(("abc",)) is None
-
-
-def test_extract_batch_uses_pre_mentions(scanner):
-    """The _extract_batch seam: precomputed mentions must produce the same
-    rows as the regex path, including on fallback (None) entries."""
-    from graphene_spark import extract
-
-    gaz = extract._gaz_for(tuple(sorted(set(ALIASES))))
-    conv = ["c1", "c1", "c2", "c2"]
-    turn = [0, 1, 0, 1]
-    text = ["abc and NAD", "café abc", None, "part_of GO:0001 ! x abc"]
-    pre = scanner.scan_texts(text)
-    with_pre = extract._extract_batch(conv, turn, text, gaz, None, mentions_pre=pre)
-    without = extract._extract_batch(conv, turn, text, gaz, None)
-    assert with_pre == without
 
 
 # ---- relation-grammar scanner (gs_scan_grammar / scan_full_arrow) ----------
@@ -307,17 +292,16 @@ def test_grammar_odd_input_fallback_shape(scanner):
     assert men == [None, None] and counts == [0, 0]
 
 
-def test_grammar_kill_switch(monkeypatch, scanner):
-    """GRAPHENE_SPARK_NO_NATIVE_GRAMMAR falls back to the mentions-only
-    scan + regex grammar without disabling the gazetteer fast path."""
+def test_empty_batch_full_scan_shape(scanner, gaz):
+    """An empty batch keeps the (mentions, (counts, cols)) shape, so the
+    emit loop's unpack of the clause half cannot fail on it."""
+    pa = pytest.importorskip("pyarrow")
     from graphene_spark import extract
 
-    monkeypatch.setenv("GRAPHENE_SPARK_NO_NATIVE_GRAMMAR", "1")
-    scan, full = extract._scan_method(scanner, "scan_texts_full", "scan_texts")
-    assert not full and scan.__name__ == "scan_texts"
-    monkeypatch.delenv("GRAPHENE_SPARK_NO_NATIVE_GRAMMAR")
-    scan, full = extract._scan_method(scanner, "scan_texts_full", "scan_texts")
-    assert full and scan.__name__ == "scan_texts_full"
+    men, cl = scanner.scan_full_arrow(pa.array([], pa.string()), [])
+    assert men == [] and cl[0] == []
+    blocks = extract._extract_batch([], [], [], gaz, None, mentions_pre=men, clauses_pre=cl)
+    assert all(len(col) == 0 for block in blocks for col in block)
 
 
 def test_case_fold_collision_disables_native():

@@ -81,18 +81,6 @@ def test_broadcast_and_salted_linking_agree(
     assert tb == ts
 
 
-def test_run_pipeline_rejects_unknown_extractor(spark, transcripts_df, dictionary_df, dictionary_pdf):
-    """A typo'd extractor must fail fast with the valid options listed, not
-    as a bare KeyError (round-4 ADVICE)."""
-    import pytest
-
-    with pytest.raises(ValueError, match="unknown extractor 'arow'.*arrow.*native.*pandas"):
-        pipeline.run_pipeline(
-            spark, transcripts_df, dictionary_df,
-            pipeline.all_aliases(dictionary_pdf), extractor="arow",
-        )
-
-
 def test_link_strategy_auto_resolution(spark, dictionary_df):
     """'auto' derives broadcast-vs-salted from the alias-map size estimate
     against spark.sql.autoBroadcastJoinThreshold (round-4 VERDICT task #7:
@@ -200,6 +188,9 @@ def test_dictionary_to_spark_stamps_exact_estimate(spark):
     df = pipeline.dictionary_to_spark(spark, pdf)
     stamped = getattr(df, "_gs_alias_map_bytes", None)
     assert stamped is not None
+    # a non-ASCII alias and NULL names make the alias-map rows unprovable;
+    # the same pass still stamps the estimate
+    assert getattr(df, "_gs_alias_map_rows", None) is None
     # the distributed estimator on a frame WITHOUT the stamp must agree
     fresh = pipeline.dictionary_to_spark(spark, pdf)
     del fresh._gs_alias_map_bytes
@@ -273,7 +264,8 @@ def test_local_alias_map_empty_keeps_spark_path(spark):
             "is_hot": [False, True],
         }
     )
-    assert linking.local_alias_map_rows(pdf) is None
+    est, rows = linking.local_alias_map(pdf)
+    assert rows is None and est is not None
     plain = pipeline.dictionary_to_spark(spark, pdf)
     assert getattr(plain, "_gs_alias_map_rows", None) is None
     stamped = pipeline.dictionary_to_spark(spark, pdf)
@@ -291,10 +283,11 @@ def test_local_alias_map_empty_keeps_spark_path(spark):
 
 def test_local_alias_map_unprovable_inputs_fall_back():
     """Any input where byte-parity with the SQL path is not PROVEN must
-    return None (the caller then keeps the Spark aggregation): non-ASCII
+    give no rows (the caller then keeps the Spark aggregation): non-ASCII
     aliases (lower/regex dialect parity unproven), NULL/NaN payload fields
     (struct-min NULL ordering not mirrored), bool entity_id, non-str
-    aliases."""
+    aliases.  The size estimate from the same pass survives every one of
+    these aborts."""
     import numpy as np
     import pandas as pd
 
@@ -311,21 +304,29 @@ def test_local_alias_map_unprovable_inputs_fall_back():
         base.update(over)
         return pd.DataFrame(base)
 
-    assert linking.local_alias_map_rows(pdf()) == [("a", 1, "A", "T", False)]
+    def rows(frame):
+        return linking.local_alias_map(frame)[1]
+
+    assert rows(pdf()) == [("a", 1, "A", "T", False)]
     # numpy scalar types are fine (the pandas default)
-    assert linking.local_alias_map_rows(
+    assert rows(
         pdf(entity_id=[np.int64(1)], is_hot=[np.bool_(True)])
     ) == [("a", 1, "A", "T", True)]
-    assert linking.local_alias_map_rows(pdf(aliases=[["Straße"]])) is None
-    assert linking.local_alias_map_rows(pdf(aliases=[["ıa"]])) is None
-    assert linking.local_alias_map_rows(pdf(aliases=[[b"a"]])) is None
-    assert linking.local_alias_map_rows(pdf(canonical_name=[None])) is None
-    assert linking.local_alias_map_rows(pdf(canonical_name=[float("nan")])) is None
-    assert linking.local_alias_map_rows(pdf(entity_type=[None])) is None
-    assert linking.local_alias_map_rows(pdf(is_hot=[None])) is None
-    assert linking.local_alias_map_rows(pdf(entity_id=[True])) is None
+    assert rows(pdf(aliases=[["Straße"]])) is None
+    assert rows(pdf(aliases=[["ıa"]])) is None
+    assert rows(pdf(aliases=[[b"a"]])) is None
+    assert rows(pdf(canonical_name=[None])) is None
+    assert rows(pdf(canonical_name=[float("nan")])) is None
+    assert rows(pdf(entity_type=[None])) is None
+    assert rows(pdf(is_hot=[None])) is None
+    assert rows(pdf(entity_id=[True])) is None
     # non-ASCII payload strings are allowed (only compared, and Python's
     # code-point order == UTF8String byte order)
-    assert linking.local_alias_map_rows(pdf(canonical_name=["Δelta"])) == [
+    assert rows(pdf(canonical_name=["Δelta"])) == [
         ("a", 1, "Δelta", "T", False)
     ]
+    # the estimate survives the row aborts: 2 * (7 alias bytes + 2 payload
+    # bytes) + 64 per alias
+    assert linking.local_alias_map(pdf(aliases=[["Straße"]]))[0] == 82
+    for over in ({"canonical_name": [None]}, {"is_hot": [None]}, {"entity_id": [True]}):
+        assert linking.local_alias_map(pdf(**over))[0] is not None, over

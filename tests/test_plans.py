@@ -23,20 +23,15 @@ def _optimized(df) -> str:
 
 def test_linking_uses_broadcast_join(spark, transcripts_df, dictionary_df, dictionary_pdf):
     aliases = pipeline.all_aliases(dictionary_pdf)
-    mentions = extract.extract_mentions(transcripts_df, aliases)
+    mentions = extract.mentions_from_rows(
+        extract.extract_rows_arrow(transcripts_df, aliases, kinds=("mention",))
+    )
     linked, _ = linking.link_mentions(mentions, dictionary_df, strategy="broadcast")
     plan = _plan(linked)
     assert "BroadcastHashJoin" in plan
     # the big (mention) side must NOT be exchanged for the join
     before_join = plan.split("BroadcastHashJoin")[-1]
     assert "Exchange hashpartitioning" not in before_join.split("BroadcastExchange")[0]
-
-
-def test_extraction_is_narrow(spark, transcripts_df, dictionary_pdf):
-    """scan -> mapInPandas with no shuffle: extraction must not exchange."""
-    aliases = pipeline.all_aliases(dictionary_pdf)
-    rows = extract.extract_rows(transcripts_df, aliases)
-    assert "Exchange" not in _plan(rows)
 
 
 def test_parquet_scan_pushdown(spark):
