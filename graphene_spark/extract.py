@@ -1,10 +1,8 @@
-"""Stable turn ordering (W1) + vectorized triple extraction (P4/P5/P6 analogs).
+"""Vectorized triple extraction (P4/P5/P6 analogs).
 
-Ordering: the reference relies on cursor order (GrameneMongoLoader.groovy:30);
-we make ordering explicit and stable with a window over (conv_id, turn_idx)
-(SURVEY.md §2.5 W1; GeneLoader.groovy:53-69 is the same pattern over
-(region, start)).  The per-turn text-equality invariant (input_hint) is tested
-against the oracle's sorted walk.
+Extraction is per turn, so it needs no turn order; where order matters
+(the FIRST/NEXT/LAST chains of W1) ``graph.adjacency_edges`` applies its
+own window over (conv_id, turn_idx).
 
 Extraction: ONE Arrow-batched stage per turn batch, ``extract_rows_arrow``
 (mapInArrow — input_hint mandates vectorized Arrow UDFs, never
@@ -23,7 +21,7 @@ until linking).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from . import native_scan, rules
 
@@ -42,17 +40,6 @@ def _gaz_for(aliases: tuple[str, ...]):
         gaz = rules.build_gazetteer_regex(list(aliases))
         _GAZ_CACHE[aliases] = gaz
     return gaz
-
-
-def with_stable_order(transcripts: DataFrame) -> DataFrame:
-    """Attach a stable per-conversation ordinal (W1).
-
-    ``turn_seq`` is row_number over (conv_id, turn_idx) — identical to
-    turn_idx when input is dense, but robust to gaps/duplicates, which is the
-    invariant the reference gets for free from its ordered cursor.
-    """
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return transcripts.withColumn("turn_seq", F.row_number().over(w))
 
 
 # Flat extraction output: one row per turn (kind='turn', metric counts), per

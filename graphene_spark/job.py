@@ -140,11 +140,12 @@ def main(argv: list[str] | None = None) -> None:
             "'iceberg:<catalog.namespace>'"
         )
 
+    tables = ["triples", "nodes", "edges"]
     if not args.resume:
         materialize.reset_output(args.out)
         # the catalog tables too: insert-if-absent never deletes, so without
         # this a non-resume Iceberg run keeps every stale row of prior runs
-        sink.reset(["triples", "nodes", "edges"])
+        sink.reset(tables)
 
     def process_bucket(bucket_df):
         res = pipeline.run_pipeline(
@@ -170,6 +171,15 @@ def main(argv: list[str] | None = None) -> None:
             "counters": counters,
         }
 
+    # each parquet table's `_kb` bucket count, and whether this run chooses
+    # it (a new table) or reads it back from the table's footers ("recorded",
+    # or "legacy" for a table written before counts were recorded)
+    layout = {}
+    if args.merge_backend == "parquet":
+        for t in tables:
+            n, source = materialize.key_buckets(spark, sink.target(t))
+            layout[t] = {"key_buckets": n, "source": source}
+
     totals = materialize.run_with_lineage(
         spark, transcripts, args.out, process_bucket, n_buckets=args.buckets, sink=sink
     )
@@ -185,6 +195,7 @@ def main(argv: list[str] | None = None) -> None:
         "nodes": sink.read("nodes").count(),
         "edges": sink.read("edges").count(),
         "lineage_rows": lineage.count(),
+        "layout": layout,
     }
 
     if args.postprocess:

@@ -7,12 +7,19 @@ the natural key) as named in BASELINE.json:6.  The write path is PLUGGABLE:
   ``MERGE INTO ... WHEN NOT MATCHED THEN INSERT`` on plain parquet:
   anti-join the incoming batch against the existing table on the key and
   append only new rows, laid out by a key-hash bucket column (``_kb``) so
-  the anti-join is partition-pruned.  Each merge clusters its rows by
-  ``_kb`` before the write, so it adds exactly one file per ``_kb`` it
-  touches, and it takes its insert count from the write itself.  Readers
-  get the table's schema from one data file's footer on the driver, so a
-  read launches no schema-inference job.  Combined with deterministic ids
-  (graph.node_id) this makes every write idempotent
+  the anti-join is partition-pruned.  Like an Iceberg partition spec, the
+  bucket count belongs to the table: its first merge picks
+  ``min(spark.sql.shuffle.partitions, KEY_BUCKETS)``, so each task of the
+  clustered write gets about one bucket, and every write records the count
+  as column metadata in the data files' footers, so it travels with the
+  committed data.  Later merges and readers take it from the table; a
+  table whose footers record no count (written before counts were
+  recorded, or by another tool) has ``KEY_BUCKETS``.  Each merge clusters
+  its rows by ``_kb`` before the write, so it adds exactly one file per
+  ``_kb`` it touches, and it takes its insert count from the write itself.
+  Readers get the table's schema from one data file's footer on the
+  driver, so a read launches no schema-inference job.  Combined with
+  deterministic ids (graph.node_id) this makes every write idempotent
   (A7 / post-import-cypher MERGE; Importer.groovy:36-52).
 * ``IcebergMergeSink`` — issues REAL ``MERGE INTO`` SQL against an Iceberg
   catalog when one is configured on the session (runtime jar +
@@ -46,20 +53,43 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.types import IntegerType, StructType
 
 
-def _append_parquet(df: DataFrame, path: str) -> None:
-    df.write.mode("append").parquet(path)
+# the most key-hash buckets a merged table gets, and the count of a table
+# whose footers record none
+KEY_BUCKETS = 64
+_BUCKETS_KEY = "graphene.key_buckets"  # column-metadata key of a table's recorded count
 
 
-KEY_BUCKETS = 64  # key-hash partition count of merged tables
-
-
-def layout_bucket(cols: list[str], n_buckets: int = KEY_BUCKETS):
-    """The ``_kb`` layout-partition expression of a merged table.
+def layout_bucket(cols: list[str], n_buckets: int):
+    """The ``_kb`` layout-partition expression of a merged table with
+    ``n_buckets`` buckets (``key_buckets`` gives a table's count).
 
     Factored out so READERS that want partition pruning (e.g. the streaming
     dedup index probe) compute the exact same hash the writer laid the table
-    out with — a reader using a different hash silently reads zero rows."""
+    out with — a reader using a different hash or count silently reads zero
+    rows."""
     return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")
+
+
+def key_buckets(spark: SparkSession, path: str) -> tuple[int, str]:
+    """The ``_kb`` bucket count of the merged table at ``path`` and where it
+    comes from:
+
+    * ``"recorded"`` — the count stored in the table's footers;
+    * ``"legacy"`` — the table exists but its footers store no count
+      (written before counts were recorded, or by another tool), so it has
+      ``KEY_BUCKETS``;
+    * ``"chosen"`` — there is no table yet: the count its first merge in
+      this session picks, ``min(spark.sql.shuffle.partitions, KEY_BUCKETS)``.
+      The clustered write hashes ``_kb`` over the shuffle partitions, so
+      each write task gets about one bucket, and one file."""
+    if not os.path.exists(path):
+        shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        return min(shuffle, KEY_BUCKETS), "chosen"
+    schema = _footer_schema(path)
+    for f in schema.fields if schema is not None else ():
+        if _BUCKETS_KEY in f.metadata:
+            return int(f.metadata[_BUCKETS_KEY]), "recorded"
+    return KEY_BUCKETS, "legacy"
 
 
 def merge_insert_absent(
@@ -67,7 +97,6 @@ def merge_insert_absent(
     df: DataFrame,
     path: str,
     keys: list[str],
-    key_buckets: int = KEY_BUCKETS,
     layout_keys: list[str] | None = None,
 ) -> int:
     """Insert-if-absent on ``keys`` (idempotent MERGE).  Returns rows inserted.
@@ -76,7 +105,10 @@ def merge_insert_absent(
     anti-join against existing data reads ONLY the partitions the incoming
     batch touches (partition pruning) instead of the whole table — the
     parquet emulation of Iceberg's MERGE INTO on a bucket-partitioned table.
-    Without this, a B-bucket resumable run costs O(B^2) table scans.
+    Without this, a B-bucket resumable run costs O(B^2) table scans.  The
+    bucket count is the table's own (``key_buckets``): picked by the merge
+    that creates the table, read back by every later one, and recorded in
+    every file this merge writes.
 
     ``layout_keys`` (default: ``keys``) picks WHICH columns the ``_kb``
     layout hashes — the Iceberg analog of choosing the table's PARTITIONED BY
@@ -95,10 +127,11 @@ def merge_insert_absent(
             "keys can land in different _kb partitions and the pruned "
             "anti-join re-inserts duplicates"
         )
-    base = df.dropDuplicates(keys).withColumn("_kb", layout_bucket(lk, key_buckets))
-    incoming = base
     recover_compaction(path)
     exists = os.path.exists(path)
+    n_buckets, _ = key_buckets(spark, path)
+    base = df.dropDuplicates(keys).withColumn("_kb", layout_bucket(lk, n_buckets))
+    incoming = base
     if exists:
         # persist: two actions follow (touched-bucket collect, write) —
         # without it the incoming frame's full upstream pipeline re-executes
@@ -122,7 +155,7 @@ def merge_insert_absent(
             e = incoming[c].eqNullSafe(ex[f"_ex_{c}"])
             cond = e if cond is None else cond & e
         incoming = incoming.join(ex, cond, "left_anti")
-    n = _write_clustered(incoming, path, "append")
+    n = _write_clustered(incoming, path, "append", n_buckets)
     if exists:
         base.unpersist()
     elif n == 0:
@@ -133,15 +166,23 @@ def merge_insert_absent(
     return n
 
 
-def _write_clustered(df: DataFrame, path: str, mode: str) -> int:
+def _write_clustered(df: DataFrame, path: str, mode: str, n_buckets: int) -> int:
     """Write ``df`` partitioned by ``_kb`` and return the rows written.
 
     One shuffle keyed on the layout column gives each ``_kb`` value one
     task, and so one file; the row count is observed on the write itself
-    instead of by a separate action."""
+    instead of by a separate action.  Every data column carries
+    ``n_buckets`` in its metadata, replacing any count it brought from
+    another table, and Spark stores that metadata in each file's footer.
+    (``withMetadata`` keeps the stamp through the optimizer and costs fewer
+    Py4J round-trips than an aliasing projection.)"""
     written = Observation()
+    stamped = df
+    for f in df.schema.fields:
+        if f.name != "_kb":
+            stamped = stamped.withMetadata(f.name, {**f.metadata, _BUCKETS_KEY: n_buckets})
     (
-        df.repartition(F.col("_kb"))
+        stamped.repartition(F.col("_kb"))
         .observe(written, F.count(F.lit(1)).alias("n"))
         .write.mode(mode)
         .partitionBy("_kb")
@@ -192,9 +233,9 @@ def _read_table(spark: SparkSession, path: str) -> DataFrame:
     Handing Spark the footer schema skips the footer schema-inference job
     that ``spark.read.parquet`` otherwise runs on every read; the ``_kb``
     directories are listed on the driver because ``session.get_spark`` sets
-    the parallel-listing threshold to ``KEY_BUCKETS``.  A table whose files
-    lack Spark's row metadata (written by another tool) falls back to
-    inference, which reads the same rows."""
+    the parallel-listing threshold to ``KEY_BUCKETS``, at least any table's
+    bucket count.  A table whose files lack Spark's row metadata (written by
+    another tool) falls back to inference, which reads the same rows."""
     schema = _footer_schema(path)
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(path)
@@ -211,24 +252,25 @@ def read_merged_pruned(
     path: str,
     layout_keys: list[str],
     probe: DataFrame,
-    key_buckets: int = KEY_BUCKETS,
 ) -> DataFrame:
     """Read a merged table restricted to the ``_kb`` partitions that could
     hold any of ``probe``'s layout-key values — a partition-PRUNED scan: the
     filter lands in the plan's PartitionFilters (PLANS.md §7), so untouched
     ``_kb=`` directories are never opened.  (``df.inputFiles()`` can NOT
-    observe this — it lists the relation's full file index.)
+    observe this — it lists the relation's full file index.)  The probe is
+    hashed with the table's own bucket count (``key_buckets``).
 
     ``probe`` must carry the ``layout_keys`` columns and MUST be small after
     ``.distinct()`` on them (the bucket set is collected to the driver; it is
-    bounded by ``key_buckets``, so the collect is at most that many ints).
-    The caller still needs its exact key join/semi-join on top — this only
-    narrows the scan to candidate partitions, the Iceberg/bucket-join analog
-    of MERGE touching only the buckets the source hits."""
+    bounded by the table's bucket count, so the collect is at most that many
+    ints).  The caller still needs its exact key join/semi-join on top — this
+    only narrows the scan to candidate partitions, the Iceberg/bucket-join
+    analog of MERGE touching only the buckets the source hits."""
     recover_compaction(path)
+    n_buckets, _ = key_buckets(spark, path)
     touched = [
         r["_kb"]
-        for r in probe.select(layout_bucket(layout_keys, key_buckets).alias("_kb"))
+        for r in probe.select(layout_bucket(layout_keys, n_buckets).alias("_kb"))
         .distinct()
         .collect()
     ]
@@ -368,6 +410,10 @@ def compact_merged(spark: SparkSession, path: str) -> dict:
     entry point), so the table is never lost and at worst the compaction
     must be re-run.
 
+    The rewrite keeps the table's bucket count and ``_kb`` values, and its
+    files record that count as a merge's do (a table whose footers held
+    none now records ``KEY_BUCKETS``, the count it already had).
+
     Returns {"files_before", "files_after", "rows"} for the caller's lineage.
 
     Single-writer enforced: a pid+starttime-stamped ``<path>.compact.lock``
@@ -383,9 +429,10 @@ def compact_merged(spark: SparkSession, path: str) -> dict:
     tmp = path.rstrip("/") + ".compact.tmp"
     try:
         recover_compaction(path)  # we hold the lock, so this repairs crashes only
+        n_buckets, _ = key_buckets(spark, path)
         df = _read_table(spark, path)
         files_before = len(df.inputFiles())
-        rows = _write_clustered(df, tmp, "errorifexists")
+        rows = _write_clustered(df, tmp, "errorifexists", n_buckets)
         os.replace(path, old)
         try:
             os.replace(tmp, path)
@@ -610,6 +657,14 @@ def completed_buckets(spark: SparkSession, lineage_path: str) -> set[int]:
     return {r["bucket"] for r in rows}
 
 
+_LINEAGE_COLUMNS = [
+    ("bucket", "int"), ("status", "string"), ("run_id", "string"),
+    ("n_turns", "long"), ("n_triples", "long"), ("n_nodes", "long"),
+    ("n_edges", "long"), ("n_dangling", "long"), ("n_errors", "long"),
+    ("counters_json", "string"),
+]
+
+
 def write_lineage_row(
     spark: SparkSession,
     lineage_path: str,
@@ -618,34 +673,23 @@ def write_lineage_row(
     counters: dict[str, int],
     run_id: str,
 ) -> None:
-    import json as _json
-
-    row = [
-        {
-            "bucket": int(bucket),
-            "status": status,
-            "run_id": run_id,
-            "n_turns": int(counters.get("n_turns", 0)),
-            "n_triples": int(counters.get("n_triples", 0)),
-            "n_nodes": int(counters.get("n_nodes", 0)),
-            "n_edges": int(counters.get("n_edges", 0)),
-            "n_dangling": int(counters.get("n_dangling", 0)),
-            "n_errors": int(counters.get("n_errors", 0)),
-            # full counters verbatim: non-KG writers (e.g. the dedup stream)
-            # carry counter names the fixed columns don't cover — without
-            # this they were silently recorded as all zeros
-            "counters_json": _json.dumps(counters, sort_keys=True),
-        }
-    ]
-    sdf = spark.createDataFrame(
-        row,
-        schema=(
-            "bucket int, status string, run_id string, n_turns long, n_triples long,"
-            " n_nodes long, n_edges long, n_dangling long, n_errors long,"
-            " counters_json string"
-        ),
+    """Append one lineage row.  The row is a one-partition projection of
+    literals, so the append is a single one-task job: no Python rows are
+    pickled and no local relation is split over the default parallelism."""
+    values = {
+        "bucket": int(bucket),
+        "status": status,
+        "run_id": run_id,
+        **{c: int(counters.get(c, 0)) for c, t in _LINEAGE_COLUMNS if t == "long"},
+        # full counters verbatim: non-KG writers (e.g. the dedup stream)
+        # carry counter names the fixed columns don't cover — without
+        # this they were silently recorded as all zeros
+        "counters_json": json.dumps(counters, sort_keys=True),
+    }
+    row = spark.range(1, numPartitions=1).select(
+        *[F.lit(values[c]).cast(t).alias(c) for c, t in _LINEAGE_COLUMNS]
     )
-    _append_parquet(sdf, lineage_path)
+    row.write.mode("append").parquet(lineage_path)
 
 
 def run_with_lineage(

@@ -91,10 +91,12 @@ def get_spark(
         # Small dimension tables (the entity dictionary) should broadcast.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
-        # A merged table has up to KEY_BUCKETS `_kb=` directories; above
-        # this threshold (Spark's default is 32) every read of it starts a
-        # distributed listing job.  At KEY_BUCKETS they are listed on the
-        # driver, which for a few dozen directories is the faster of the two.
+        # A merged table has one `_kb=` directory per bucket, and its bucket
+        # count is at most KEY_BUCKETS; above this threshold (Spark's
+        # default is 32) every read of it starts a distributed listing job.
+        # The threshold must stay at or above every table's count, so that
+        # the directories are listed on the driver, which for a few dozen
+        # directories is the faster of the two.
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(KEY_BUCKETS))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

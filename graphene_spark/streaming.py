@@ -152,7 +152,8 @@ def dedup_batch(
     exact touched band keys (whole buckets survive, so per-bucket cap counts
     are unchanged) — the cap window sorts a batch-sized slice of the index,
     and at 100 TB of history a batch touching b band keys reads
-    ``min(b, key_buckets)/key_buckets`` of the index, not all of it.
+    ``min(b, n)/n`` of the index, not all of it, where n is the index's
+    recorded bucket count (``materialize.key_buckets``).
     Amortize per-batch overhead with availableNow batching and run
     ``compact_dedup_state`` periodically to fold the per-batch appended
     files back to one per bucket.

@@ -142,7 +142,8 @@ def main() -> None:
         "by the probe key (`merge_insert_absent(layout_keys=[\"band_idx\",\n"
         "\"band_sig\"])`, identity `(doc_id, band_idx, band_sig)` — layout ⊆ identity\n"
         "keeps the merge's pruned anti-join sound), and `read_merged_pruned`\n"
-        "recomputes the writer's exact layout hash (`materialize.layout_bucket`)\n"
+        "recomputes the writer's exact layout hash (`materialize.layout_bucket`,\n"
+        "with the index's own bucket count from its footers, `materialize.key_buckets`)\n"
         "over the batch's distinct band keys and filters the scan on the resulting\n"
         "`_kb` set.  The filter lands in `PartitionFilters` — the hive-partition\n"
         "level, so untouched directories are never opened — with `DataFilters`\n"
@@ -157,7 +158,10 @@ def main() -> None:
         "        ...\n"
         "```\n\n"
         "(Probe with one band key -> exactly one `_kb` partition in the filter; a\n"
-        "b-key batch reads min(b, KEY_BUCKETS)/KEY_BUCKETS of the index.)  Pinned\n"
+        "b-key batch reads min(b, n)/n of the index, where n is the index's\n"
+        "recorded bucket count: min(shuffle partitions, KEY_BUCKETS) when the index\n"
+        "was created, KEY_BUCKETS for an index that records none.  The excerpt\n"
+        "above is from a 64-bucket index.)  Pinned\n"
         "behaviorally by `test_band_index_probe_is_partition_pruned`: a poison row\n"
         "planted inside an untouched partition directory must stay invisible to the\n"
         "pruned scan — `DataFrame.inputFiles()` can NOT pin this (it lists the\n"

@@ -8,10 +8,11 @@ dedup-at-ingest design survives a year of production appends:
 * **file counts stay bounded**: every batch appends one parquet file per
   touched ``_kb`` partition, so between compactions the file count grows
   linearly — but each compaction must fold the state back to exactly one
-  file per OCCUPIED partition.  Occupancy saturates at the layout constant
-  (``materialize.KEY_BUCKETS`` = 64), so the post-compaction trajectory
-  rises toward 64 and then stays flat forever, independent of how many
-  batches ago the state dir was created.
+  file per OCCUPIED partition.  Occupancy saturates at the table's bucket
+  count (``materialize.key_buckets``: the session's shuffle partitions when
+  the state dir was created, at most ``materialize.KEY_BUCKETS`` = 64), so
+  the post-compaction trajectory rises toward it and then stays flat
+  forever, independent of how many batches ago the state dir was created.
 * **probe latency is flat in history size**: the band-index probe partition-
   prunes to the buckets the incoming batch touches (streaming.py layout
   ``_kb``), so batch N's wall time must not trend with N even though the

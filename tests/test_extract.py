@@ -51,30 +51,6 @@ def test_dangling_triple_has_null_subject():
     assert t == [rules.Triple(None, "PART_OF", "GO:77")]
 
 
-def test_stable_order_invariant(spark, transcripts_df, transcripts_pdf):
-    """Per-turn text equality under the stable ordering window (input_hint):
-    three different physical row orders -> identical ordered text."""
-    ordered = (
-        extract.with_stable_order(transcripts_df)
-        .select("conv_id", "turn_seq", "text")
-        .orderBy("conv_id", "turn_seq")
-        .toPandas()
-    )
-    for seed in (7, 8):
-        shuffled = transcripts_pdf.sample(frac=1.0, random_state=seed).reset_index(drop=True)
-        df2 = spark.createDataFrame(shuffled)
-        ordered2 = (
-            extract.with_stable_order(df2)
-            .select("conv_id", "turn_seq", "text")
-            .orderBy("conv_id", "turn_seq")
-            .toPandas()
-        )
-        pd.testing.assert_frame_equal(ordered, ordered2)
-    # reference order: the oracle's mergesort over (conv_id, turn_idx)
-    ref = transcripts_pdf.sort_values(["conv_id", "turn_idx"], kind="mergesort")
-    assert list(ordered["text"]) == list(ref["text"])
-
-
 def test_spark_extraction_matches_oracle_walker(
     spark, transcripts_df, transcripts_pdf, dictionary_pdf
 ):

@@ -358,8 +358,9 @@ def test_merge_writes_one_file_per_touched_kb(spark, tmp_path):
         )
 
     def one_file_per_touched_kb(files, df):
-        touched = {r["_kb"] for r in df.select(materialize.layout_bucket(["k"]).alias("_kb"))
-                   .distinct().collect()}
+        n_buckets, _ = materialize.key_buckets(spark, path)
+        touched = {r["_kb"] for r in df.select(materialize.layout_bucket(["k"], n_buckets)
+                                               .alias("_kb")).distinct().collect()}
         dirs = [os.path.basename(os.path.dirname(f)) for f in files]
         return sorted(dirs) == sorted(f"_kb={kb}" for kb in touched)
 
@@ -381,17 +382,51 @@ def test_merge_writes_one_file_per_touched_kb(spark, tmp_path):
     assert not os.path.exists(fresh)
 
 
+def _legacy_table(df, path: str, keys: list[str]) -> None:
+    """A merged table as written before bucket counts were recorded:
+    ``KEY_BUCKETS`` buckets, one file each, footers without a count."""
+    (
+        df.withColumn("_kb", materialize.layout_bucket(keys, materialize.KEY_BUCKETS))
+        .repartition("_kb")
+        .write.partitionBy("_kb")
+        .parquet(path)
+    )
+
+
+def _footer_metadata(file: str) -> dict:
+    """The column metadata a data file's footer records, by column."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    meta = pq.read_metadata(file).metadata[b"org.apache.spark.sql.parquet.row.metadata"]
+    return {f["name"]: f["metadata"] for f in json.loads(meta)["fields"]}
+
+
+def _footer_counts(path: str) -> set:
+    """The bucket counts the data files of a table record (None for a file
+    that records none); every data column of a file records the same."""
+    counts = set()
+    for f in _data_files(path):
+        found = {m.get("graphene.key_buckets") for m in _footer_metadata(f).values()}
+        assert len(found) == 1, (f, found)
+        counts |= found
+    return counts
+
+
 def test_read_merged_scan_runs_one_job(spark, tmp_path):
-    """A full scan of a 64-``_kb`` merged table is one Spark job: the
-    ``_kb`` directories are listed on the driver and the schema comes from a
-    footer, so neither a listing job nor a schema-inference job runs."""
+    """A full scan of a merged table with the most buckets a table can have
+    (a legacy 64-``_kb`` one) is one Spark job: the ``_kb`` directories are
+    listed on the driver and the schema comes from a footer, so neither a
+    listing job nor a schema-inference job runs."""
     import uuid
 
     import pyspark.sql.functions as F
 
     path = str(tmp_path / "t")
     df = spark.range(2000).select(F.col("id").alias("k"), F.col("id").cast("string").alias("v"))
-    materialize.merge_insert_absent(spark, df, path, ["k"])
+    _legacy_table(df, path, ["k"])
+    assert materialize.key_buckets(spark, path) == (materialize.KEY_BUCKETS, "legacy")
     assert len([d for d in os.listdir(path) if d.startswith("_kb=")]) == materialize.KEY_BUCKETS
 
     sc = spark.sparkContext
@@ -476,7 +511,7 @@ def test_summary_counts_tables_after_lost_lineage(spark, clean_run, tmp_path, ca
         assert summary[name] == spark.read.parquet(os.path.join(out, name)).count()
 
 
-_KILL_AFTER_TRIPLES_MERGE = """
+_KILL_AFTER_MERGE = """
 import os, signal, sys
 sys.path.insert(0, {repo!r})
 from graphene_spark import job, materialize
@@ -485,7 +520,7 @@ merge = materialize.merge_insert_absent
 
 def merge_then_die(spark, df, path, *args, **kwargs):
     n = merge(spark, df, path, *args, **kwargs)
-    if os.path.basename(path.rstrip("/")) == "triples":
+    if os.path.basename(path.rstrip("/")) == {table!r}:
         os.kill(os.getpid(), signal.SIGKILL)
     return n
 
@@ -494,31 +529,202 @@ job.main(sys.argv[1:])
 """
 
 
-def test_resume_after_kill_following_triples_merge(spark, clean_run, tmp_path):
-    """A job SIGKILLed right after its first ``triples`` merge commits, then
-    resumed, ends with exactly the tables of a clean run: no identity key
-    twice, and one ``done`` lineage row per bucket."""
+def _run_killed_after_merge(spark, out: str, table: str) -> None:
+    """``job.main`` in a subprocess that SIGKILLs itself right after its
+    first merge into ``table`` returns.  The subprocess gets the test
+    session's shuffle partitions, so its new tables pick the bucket count
+    the clean run's did."""
     import subprocess
     import sys
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = str(tmp_path / "out")
-    env = dict(os.environ, SPARK_DRIVER_MEM="1g")
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g",
+               SPARK_GRAFT_CPUS=spark.conf.get("spark.sql.shuffle.partitions"))
     proc = subprocess.run(
-        [sys.executable, "-c", _KILL_AFTER_TRIPLES_MERGE.format(repo=repo),
+        [sys.executable, "-c", _KILL_AFTER_MERGE.format(repo=repo, table=table),
          *_JOB_ARGS, "--out", out, "--master", "local[2]"],
         env=env, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == -9, proc.stderr[-3000:]
+
+
+def _assert_resumed_equals_clean(spark, out: str, clean: str) -> None:
+    """Every table equals the clean run's, no identity key is duplicated,
+    and each bucket has one ``done`` lineage row."""
+    for name, keys in _TABLE_KEYS.items():
+        got = spark.read.parquet(os.path.join(out, name))
+        assert _same_rows(got, spark.read.parquet(os.path.join(clean, name)))
+        assert got.groupBy(*keys).count().filter("count > 1").isEmpty()
+    lin = spark.read.parquet(os.path.join(out, "lineage")).filter("status = 'done'")
+    assert sorted(r["bucket"] for r in lin.select("bucket").collect()) == [0, 1]
+
+
+def test_resume_after_kill_following_triples_merge(spark, clean_run, tmp_path):
+    """A job SIGKILLed right after its first ``triples`` merge commits, then
+    resumed, ends with exactly the tables of a clean run: no identity key
+    twice, and one ``done`` lineage row per bucket."""
+    out = str(tmp_path / "out")
+    _run_killed_after_merge(spark, out, "triples")
     assert _data_files(os.path.join(out, "triples"))
     assert not os.path.exists(os.path.join(out, "lineage"))
 
     from graphene_spark import job
 
     job.main([*_JOB_ARGS, "--out", out, "--master", "local[4]", "--resume"])
-    for name, keys in _TABLE_KEYS.items():
-        got = spark.read.parquet(os.path.join(out, name))
-        assert _same_rows(got, spark.read.parquet(os.path.join(clean_run, name)))
-        assert got.groupBy(*keys).count().filter("count > 1").isEmpty()
-    lin = spark.read.parquet(os.path.join(out, "lineage")).filter("status = 'done'")
-    assert sorted(r["bucket"] for r in lin.select("bucket").collect()) == [0, 1]
+    _assert_resumed_equals_clean(spark, out, clean_run)
+
+
+def test_resume_after_kill_following_nodes_merge(spark, clean_run, tmp_path, capsys):
+    """A job SIGKILLed right after its first ``nodes`` merge, before
+    ``edges`` exists, then resumed, ends with exactly the tables of a clean
+    run; the resumed run reads the two committed tables' bucket counts back
+    and gives the new ``edges`` table the count the clean run chose."""
+    import json
+
+    out = str(tmp_path / "out")
+    _run_killed_after_merge(spark, out, "nodes")
+    assert _data_files(os.path.join(out, "nodes"))
+    assert not os.path.exists(os.path.join(out, "edges"))
+    assert not os.path.exists(os.path.join(out, "lineage"))
+
+    from graphene_spark import job
+
+    capsys.readouterr()
+    job.main([*_JOB_ARGS, "--out", out, "--master", "local[4]", "--resume"])
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    _assert_resumed_equals_clean(spark, out, clean_run)
+    n_clean = {t: materialize.key_buckets(spark, os.path.join(clean_run, t)) for t in _TABLE_KEYS}
+    assert set(n_clean.values()) == {(8, "recorded")}
+    for t in _TABLE_KEYS:
+        assert materialize.key_buckets(spark, os.path.join(out, t)) == n_clean[t]
+    assert summary["layout"] == {
+        "triples": {"key_buckets": 8, "source": "recorded"},
+        "nodes": {"key_buckets": 8, "source": "recorded"},
+        "edges": {"key_buckets": 8, "source": "chosen"},
+    }
+
+
+# ---------------------------------------------------------------------------
+# per-table bucket count, recorded in the footers
+# ---------------------------------------------------------------------------
+
+def test_new_table_records_session_bucket_count(spark, tmp_path):
+    """A table created under the test session (8 shuffle partitions) has
+    min(8, KEY_BUCKETS) buckets, and every data file's footer records that
+    count, also after a second merge and after compaction."""
+    import pyspark.sql.functions as F
+
+    path = str(tmp_path / "t")
+    n = min(8, materialize.KEY_BUCKETS)
+    assert materialize.key_buckets(spark, path) == (n, "chosen")
+    df = spark.range(300).select(F.col("id").alias("k"), F.lit("x").alias("v"))
+    assert materialize.merge_insert_absent(spark, df, path, ["k"]) == 300
+    assert materialize.key_buckets(spark, path) == (n, "recorded")
+    assert sorted(d for d in os.listdir(path) if d.startswith("_kb=")) == sorted(
+        f"_kb={kb}" for kb in range(n)
+    )
+    more = spark.range(250, 400).select(F.col("id").alias("k"), F.lit("y").alias("v"))
+    assert materialize.merge_insert_absent(spark, more, path, ["k"]) == 100
+    assert len(_data_files(path)) == 2 * n
+    assert _footer_counts(path) == {n}
+
+    stats = materialize.compact_merged(spark, path)
+    assert (stats["files_before"], stats["files_after"], stats["rows"]) == (2 * n, n, 400)
+    assert _footer_counts(path) == {n}
+    assert materialize.key_buckets(spark, path) == (n, "recorded")
+    stored = materialize._read_table(spark, path)
+    assert stored.filter(F.col("_kb") != materialize.layout_bucket(["k"], n)).isEmpty()
+    assert materialize.read_merged(spark, path).count() == 400
+
+
+def test_legacy_table_keeps_64_buckets(spark, tmp_path):
+    """A table written before counts were recorded keeps KEY_BUCKETS: a
+    replay into it inserts nothing, new rows land in its 64-bucket layout
+    and record 64, and the pruned read finds its rows."""
+    import pyspark.sql.functions as F
+
+    path = str(tmp_path / "t")
+    df = spark.range(200).select(F.col("id").alias("k"), F.col("id").cast("string").alias("v"))
+    _legacy_table(df, path, ["k"])
+    legacy_files = _data_files(path)
+    assert _footer_counts(path) == {None}
+    assert materialize.key_buckets(spark, path) == (materialize.KEY_BUCKETS, "legacy")
+
+    assert materialize.merge_insert_absent(spark, df, path, ["k"]) == 0
+    assert _data_files(path) == legacy_files
+    more = spark.range(150, 260).select(F.col("id").alias("k"), F.col("id").cast("string").alias("v"))
+    assert materialize.merge_insert_absent(spark, more, path, ["k"]) == 60
+    assert materialize.key_buckets(spark, path)[0] == materialize.KEY_BUCKETS
+    new_files = _data_files(path) - legacy_files
+    assert new_files
+    assert {_footer_metadata(f)["v"].get("graphene.key_buckets") for f in new_files} == {
+        materialize.KEY_BUCKETS
+    }
+    stored = materialize._read_table(spark, path)
+    assert stored.filter(
+        F.col("_kb") != materialize.layout_bucket(["k"], materialize.KEY_BUCKETS)
+    ).isEmpty()
+
+    probe = spark.range(0, 260, 13).select(F.col("id").alias("k"))
+    got = materialize.read_merged_pruned(spark, path, ["k"], probe).join(probe, "k", "left_semi")
+    assert sorted(r["k"] for r in got.collect()) == list(range(0, 260, 13))
+
+
+def test_incoming_count_is_restamped(spark, tmp_path):
+    """An incoming frame whose columns carry another table's count is
+    recorded with the target table's count; other column metadata stays."""
+    import pyspark.sql.functions as F
+
+    meta = {"graphene.key_buckets": 3, "note": "kept"}
+    src = spark.range(100).select(
+        F.col("id").alias("k", metadata=meta), F.col("id").cast("string").alias("v", metadata=meta)
+    )
+    fresh = str(tmp_path / "fresh")
+    assert materialize.merge_insert_absent(spark, src, fresh, ["k"]) == 100
+    assert materialize.key_buckets(spark, fresh) == (8, "recorded")
+    assert _footer_counts(fresh) == {8}
+    assert {m["note"] for f in _data_files(fresh) for m in _footer_metadata(f).values()} == {"kept"}
+
+    # a frame read from the 8-bucket table, merged into a legacy one
+    legacy = str(tmp_path / "legacy")
+    _legacy_table(spark.range(50).select(F.col("id").alias("k"), F.col("id").cast("string").alias("v")),
+                  legacy, ["k"])
+    read = materialize.read_merged(spark, fresh)
+    assert {f.metadata["graphene.key_buckets"] for f in read.schema.fields} == {8}
+    before = _data_files(legacy)
+    assert materialize.merge_insert_absent(spark, read, legacy, ["k"]) == 50
+    assert {_footer_metadata(f)["k"]["graphene.key_buckets"]
+            for f in _data_files(legacy) - before} == {materialize.KEY_BUCKETS}
+
+
+def test_lineage_row_matches_local_relation_writer(spark, tmp_path):
+    """The one-task lineage append writes the rows, and the mergeSchema
+    read, that the former ``createDataFrame`` writer produced."""
+    import json
+
+    counters = {"n_turns": 12, "n_triples": 2**40, "n_errors": 1, "accepted": 3}
+
+    def old_writer(path, bucket, status, counters, run_id):
+        row = {c: int(counters.get(c, 0)) for c in
+               ("n_turns", "n_triples", "n_nodes", "n_edges", "n_dangling", "n_errors")}
+        row.update(bucket=int(bucket), status=status, run_id=run_id,
+                   counters_json=json.dumps(counters, sort_keys=True))
+        spark.createDataFrame([row], schema=(
+            "bucket int, status string, run_id string, n_turns long, n_triples long,"
+            " n_nodes long, n_edges long, n_dangling long, n_errors long,"
+            " counters_json string"
+        )).write.mode("append").parquet(path)
+
+    old, new, mixed = (str(tmp_path / d) for d in ("old", "new", "mixed"))
+    for b, status in ((0, "done"), (5, "failed")):
+        old_writer(old, b, status, counters, "r1")
+        materialize.write_lineage_row(spark, new, b, status, counters, "r1")
+    old_writer(mixed, 0, "done", counters, "r1")
+    materialize.write_lineage_row(spark, mixed, 5, "failed", counters, "r1")
+
+    want = materialize.read_lineage(spark, old)
+    for path in (new, mixed):
+        got = materialize.read_lineage(spark, path)
+        assert got.schema == want.schema
+        assert _same_rows(got, want)
+    assert materialize.completed_buckets(spark, new) == {0}

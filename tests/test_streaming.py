@@ -142,8 +142,10 @@ def test_band_index_probe_is_partition_pruned(spark, tmp_path):
 
     # probe with ONE existing band key -> exactly one _kb partition touched
     one = full.select("band_idx", "band_sig").limit(1).persist()
+    n_buckets, source = materialize.key_buckets(spark, index_path)
+    assert (n_buckets, source) == (8, "recorded")
     probe_kb = one.select(
-        materialize.layout_bucket(["band_idx", "band_sig"]).alias("_kb")
+        materialize.layout_bucket(["band_idx", "band_sig"], n_buckets).alias("_kb")
     ).collect()[0]["_kb"]
 
     # behavioral pruning pin: plant a poison row inside an UNTOUCHED _kb
@@ -174,9 +176,10 @@ def test_band_index_probe_is_partition_pruned(spark, tmp_path):
     one.unpersist()
 
     # the layout hash must match the writer's: every index row's stored _kb
-    # equals layout_bucket(band_idx, band_sig) recomputed reader-side
+    # equals layout_bucket(band_idx, band_sig) recomputed reader-side with
+    # the index's recorded bucket count
     mismatches = full.filter(
-        F.col("_kb") != materialize.layout_bucket(["band_idx", "band_sig"])
+        F.col("_kb") != materialize.layout_bucket(["band_idx", "band_sig"], n_buckets)
     ).count()
     assert mismatches == 0
 
@@ -346,10 +349,10 @@ def test_dedup_state_soak_bounded(spark, tmp_path):
     (the multi-hundred-batch run is recorded in BENCH/NOTES.md).  Pins the
     properties that make dedup-at-ingest survive a year of appends:
 
-    * post-compaction file counts are BOUNDED by the layout constant
-      (``materialize.KEY_BUCKETS`` — one file per occupied ``_kb``
-      partition; occupancy saturates at 64 and can never exceed it no
-      matter how many batches ago the state dir was created);
+    * post-compaction file counts are BOUNDED by each table's recorded
+      bucket count (``materialize.key_buckets`` — one file per occupied
+      ``_kb`` partition; occupancy saturates at that count and can never
+      exceed it no matter how many batches ago the state dir was created);
     * per-batch wall time does not trend with history size (the probe is
       partition-pruned to the batch's buckets, so the last batch pays what
       an early batch paid even though the corpus keeps growing);
@@ -368,8 +371,9 @@ def test_dedup_state_soak_bounded(spark, tmp_path):
     soak = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(soak)
 
+    state = str(tmp_path / "soak")
     res = soak.run_soak(
-        spark, str(tmp_path / "soak"), n_batches=30,
+        spark, state, n_batches=30,
         docs_per_batch=5, compact_every=10,
     )
     # every injected dup rejected, nothing else rejected
@@ -381,13 +385,17 @@ def test_dedup_state_soak_bounded(spark, tmp_path):
     assert res["accepted_rows"] == totals["accepted"]
     # bounded state: post-compaction file counts grow only toward bucket
     # saturation (one file per OCCUPIED _kb partition), never past the
-    # layout constant — and the un-compacted tail since the last compaction
-    # is bounded by batches x touched-buckets, independent of history
+    # table's bucket count — and the un-compacted tail since the last
+    # compaction is bounded by batches x touched-buckets, independent of
+    # history
+    n_index, src_index = materialize.key_buckets(spark, os.path.join(state, "band_index"))
+    n_accepted, src_accepted = materialize.key_buckets(spark, os.path.join(state, "accepted"))
+    assert (n_index, n_accepted, src_index, src_accepted) == (8, 8, "recorded", "recorded")
     trail = res["post_compact_files"]
     assert len(trail) == 3
     for t in trail:
-        assert t["band_index_files"] <= materialize.KEY_BUCKETS, trail
-        assert t["accepted_files"] <= materialize.KEY_BUCKETS, trail
+        assert t["band_index_files"] <= n_index, trail
+        assert t["accepted_files"] <= n_accepted, trail
     # flat probe latency: steady-state late-quartile mean within noise of
     # the early-quartile mean (a linear-in-history probe would trend far
     # past this bound over the soak's growth in corpus size)
