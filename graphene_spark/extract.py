@@ -277,7 +277,7 @@ def extract_rows_arrow(
             names = rb.schema.names
             text_arr = rb.column(names.index("text"))
             if triples_fast:
-                # kinds=('triple',) — the KG pipeline hot path: only rows
+                # kinds=('triple',) — the triples-only path: only rows
                 # that can emit a triple (regex-fallback or clause-bearing,
                 # typically a minority) are materialized as Python strings;
                 # to_pylist of the full text/conv columns is ~35% of the

@@ -6,8 +6,12 @@
 
 Stages (each a DataFrame DAG, scheduled together — the reference's fixed
 loader ordering, Importer.groovy:21-24, becomes data dependencies):
-  1. extraction + linking (pipeline.run_pipeline)
-  2. materialization with per-bucket lineage (resumable, insert-if-absent)
+  1. extraction + linking (pipeline.run_pipeline); each bucket's extraction
+     runs once and is persisted, and its counters, triples, nodes and edges
+     all read that one frame
+  2. materialization with per-bucket lineage (resumable, insert-if-absent);
+     the bucket's extraction is released once its lineage row is written,
+     or when the bucket raises
   3. post-process rewrites with regression counters (postprocess.*,
      with --postprocess)
 
@@ -153,22 +157,31 @@ def main(argv: list[str] | None = None) -> None:
             link_strategy=args.link_strategy,
             fuzzy_threshold=args.fuzzy_threshold,
         )
-        counters = {
-            r["k"]: r["v"]
-            for r in res["metrics"]
-            .agg(
-                F.sum("n_turns").alias("n_turns"),
-                F.sum("n_error_turns").alias("n_errors"),
-            )
-            .selectExpr("stack(2, 'n_turns', n_turns, 'n_errors', n_errors) as (k, v)")
-            .collect()
-        }
-        counters["n_dangling"] = res["dangling"].count()
+        # every output below and every merge of this bucket reads this one
+        # frame; persisted before anything forces it, released by
+        # run_with_lineage ("cached"), or here if the counters raise
+        extracted = res["extracted"].persist()
+        try:
+            counters = {
+                r["k"]: r["v"]
+                for r in res["metrics"]
+                .agg(
+                    F.sum("n_turns").alias("n_turns"),
+                    F.sum("n_error_turns").alias("n_errors"),
+                )
+                .selectExpr("stack(2, 'n_turns', n_turns, 'n_errors', n_errors) as (k, v)")
+                .collect()
+            }
+            counters["n_dangling"] = res["dangling"].count()
+        except BaseException:
+            extracted.unpersist(blocking=True)
+            raise
         return {
             "triples": res["triples"],
             "nodes": res["nodes"],
             "edges": res["edges"],
             "counters": counters,
+            "cached": extracted,
         }
 
     # each parquet table's `_kb` bucket count, and whether this run chooses

@@ -707,6 +707,14 @@ def run_with_lineage(
     {"triples": df, "nodes": df, "edges": df, counters: {...}}; outputs are
     merged insert-if-absent so re-processing a bucket is a no-op.
 
+    The result may also carry ``"cached"``: a DataFrame that
+    ``process_bucket`` persisted for the bucket's merges to read (job.py
+    persists the bucket's extraction).  It is unpersisted once the
+    bucket's lineage row is written, or when a merge or the lineage write
+    raises, and the release blocks until its blocks are gone.  So the
+    cache holds at most one bucket's extraction rows at any time: about
+    one row per turn, mention and raw triple of that bucket.
+
     ``sink`` is any merge sink (ParquetMergeSink by default, or an
     IcebergMergeSink for a real lakehouse).  Lineage stays a parquet table
     under ``out_dir`` regardless of sink — it is tiny (one row per bucket
@@ -725,15 +733,19 @@ def run_with_lineage(
             continue
         part = bucketed.filter(F.col("_bucket") == b).drop("_bucket")
         result = process_bucket(part)
-        counters = dict(result.get("counters", {}))
-        counters["n_triples"] = sink.merge_insert_absent(
-            result["triples"], "triples", ["subj", "pred", "obj"]
-        )
-        counters["n_nodes"] = sink.merge_insert_absent(result["nodes"], "nodes", ["node_id"])
-        counters["n_edges"] = sink.merge_insert_absent(
-            result["edges"], "edges", ["src", "rel_type", "dst"]
-        )
-        write_lineage_row(spark, lineage_path, b, "done", counters, run_id)
+        try:
+            counters = dict(result.get("counters", {}))
+            counters["n_triples"] = sink.merge_insert_absent(
+                result["triples"], "triples", ["subj", "pred", "obj"]
+            )
+            counters["n_nodes"] = sink.merge_insert_absent(result["nodes"], "nodes", ["node_id"])
+            counters["n_edges"] = sink.merge_insert_absent(
+                result["edges"], "edges", ["src", "rel_type", "dst"]
+            )
+            write_lineage_row(spark, lineage_path, b, "done", counters, run_id)
+        finally:
+            if result.get("cached") is not None:
+                result["cached"].unpersist(blocking=True)
         totals["buckets_run"] += 1
     return totals
 

@@ -428,8 +428,9 @@ class AsciiGazetteerScanner:
         return out, (counts.tolist(), cols)
 
     def scan_triples_arrow(self, arr):
-        """Triples-only scan service (the ``kinds=('triple',)`` hot path —
-        the KG pipeline default): returns row-aligned-to-NEEDED lists
+        """Triples-only scan service (the ``kinds=('triple',)`` path of
+        extract.extract_rows_arrow; run_pipeline reads every kind from one
+        frame and does not take it): returns row-aligned-to-NEEDED lists
         ``(needed, texts, fallback, counts, first_surf, cols)`` or ``None``
         when the batch must take the generic path.
 

@@ -6,9 +6,11 @@ the merge sink with lineage on top.
 
 The reference runs ten loaders sequentially (Importer.groovy:21-24,38-44);
 here every stage is a DataFrame, so the DAG scheduler parallelizes whatever
-is independent.  The extraction is deliberately NOT cached: each output
-(triples, mentions, metrics) re-runs the narrow extraction stage with only
-its own row kind pushed inside it (see run_pipeline).
+is independent.  One extraction frame (``extracted``, every row kind) feeds
+every output: triples, mentions and metrics are kind filters over it.
+run_pipeline caches nothing; a caller that forces several outputs persists
+``extracted`` for as long as it forces them (job.py per bucket, streaming.py
+per micro-batch), so each turn crosses the Python boundary once.
 """
 
 from __future__ import annotations
@@ -129,12 +131,10 @@ def run_pipeline(
     from .session import ensure_shipped
 
     ensure_shipped(spark)
-    # NOTE deliberately NOT persisted: the flat extraction recomputes in
-    # ~0.7s/60k turns (warm) while materializing it into the block-manager
-    # cache measured 2-4x slower than recomputation.  Downstream consumers
-    # (triples/mentions/metrics/nodes/edges) each re-run the cheap narrow
-    # stage instead; callers that force ALL outputs repeatedly can persist
-    # explicitly.
+    # Nothing is persisted here: a caller that forces one output (the
+    # bench's triples) recomputes the narrow extraction faster than it
+    # could cache it, while a caller that forces several persists
+    # out["extracted"] before forcing any, and releases it afterwards.
     if canonicalize_dictionary:
         # collapse entities connected through shared aliases onto one
         # canonical id/name (connected components over the alias graph —
@@ -169,27 +169,19 @@ def run_pipeline(
     if link_strategy == "auto":
         link_strategy = linking.resolve_link_strategy(dictionary)
 
-    # the full-kind frame is returned for callers ("extracted"); each
-    # downstream branch re-runs the cheap narrow stage with the kind filter
-    # PUSHED INSIDE the Python boundary (extract._extract_batch docstring) —
-    # the triples branch ships no mention/turn rows through Arrow, the
-    # mention branch no triple rows, etc.  Recomputation was already the
-    # deliberate trade (see the non-persist note above); the pushdown makes
-    # each recompute strictly cheaper than filtering the full frame.
+    # ONE extraction frame with every row kind; raw_triples, mentions and
+    # metrics are kind filters over that same DataFrame object, so a caller
+    # that persists out["extracted"] serves all of them from one pass.
     # extract.extract_rows_arrow is looked up on the module at call time, so
     # a wrapper installed there (perfbench's tracing) sees every extraction.
     def b_extracted(o):
         o["extracted"] = extract.extract_rows_arrow(transcripts, aliases)
 
     def b_raw_triples(o):
-        o["raw_triples"] = extract.triples_from_rows(
-            extract.extract_rows_arrow(transcripts, aliases, kinds=("triple",))
-        )
+        o["raw_triples"] = extract.triples_from_rows(o["extracted"])
 
     def b_mentions(o):
-        o["mentions"] = extract.mentions_from_rows(
-            extract.extract_rows_arrow(transcripts, aliases, kinds=("mention",))
-        )
+        o["mentions"] = extract.mentions_from_rows(o["extracted"])
 
     def b_link_triples(o):
         o["triples"], o["dangling"] = linking.link_triples(
@@ -210,9 +202,7 @@ def run_pipeline(
         )
 
     def b_metrics(o):
-        o["metrics"] = extract.metrics_from_rows(
-            extract.extract_rows_arrow(transcripts, aliases, kinds=("turn",))
-        )
+        o["metrics"] = extract.metrics_from_rows(o["extracted"])
 
     out = _LazyOutputs(
         {

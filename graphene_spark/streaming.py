@@ -57,28 +57,33 @@ def stream_transcripts(
         if batch_df.isEmpty():
             return
         res = pipeline.run_pipeline(spark, batch_df, dictionary, aliases)
-        n_t = materialize.merge_insert_absent(
-            spark, res["triples"], os.path.join(out_dir, "triples"), ["subj", "pred", "obj"]
-        )
-        n_n = materialize.merge_insert_absent(
-            spark, res["nodes"], os.path.join(out_dir, "nodes"), ["node_id"]
-        )
-        n_e = materialize.merge_insert_absent(
-            spark, res["edges"], os.path.join(out_dir, "edges"), ["src", "rel_type", "dst"]
-        )
-        materialize.write_lineage_row(
-            spark,
-            os.path.join(out_dir, "lineage"),
-            bucket=int(batch_id),
-            status="done",
-            counters={
-                "n_turns": batch_df.count(),
-                "n_triples": n_t,
-                "n_nodes": n_n,
-                "n_edges": n_e,
-            },
-            run_id=f"stream-{batch_id}",
-        )
+        # the three merges all read the micro-batch's one extraction pass
+        extracted = res["extracted"].persist()
+        try:
+            n_t = materialize.merge_insert_absent(
+                spark, res["triples"], os.path.join(out_dir, "triples"), ["subj", "pred", "obj"]
+            )
+            n_n = materialize.merge_insert_absent(
+                spark, res["nodes"], os.path.join(out_dir, "nodes"), ["node_id"]
+            )
+            n_e = materialize.merge_insert_absent(
+                spark, res["edges"], os.path.join(out_dir, "edges"), ["src", "rel_type", "dst"]
+            )
+            materialize.write_lineage_row(
+                spark,
+                os.path.join(out_dir, "lineage"),
+                bucket=int(batch_id),
+                status="done",
+                counters={
+                    "n_turns": batch_df.count(),
+                    "n_triples": n_t,
+                    "n_nodes": n_n,
+                    "n_edges": n_e,
+                },
+                run_id=f"stream-{batch_id}",
+            )
+        finally:
+            extracted.unpersist(blocking=True)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

@@ -70,8 +70,7 @@ def main() -> None:
                 f.write(queries[name](spark, sf_dir)._sc is None and "" or "")
         spark.sparkContext.setJobDescription(None)
 
-    if only is None or "tdp_minhash_dedup" in (only or set()):
-        import pyspark.sql.functions as F  # noqa: F401
+    if only is None or "tdp_minhash_dedup" in only:
         from graphene_spark.tdp import dedup
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -83,9 +82,9 @@ def main() -> None:
             runs.append(round(time.perf_counter() - t0, 3))
         out["tdp_minhash_dedup"] = runs
 
+    if only is None or "kg_extract_link" in only:
         from graphene_spark import datagen, datagen_spark, pipeline
 
-        sf = entry_mod and 0.1
         n_convs = 30_000
         dic = datagen.make_entity_dictionary(n_entities=500, n_hot=10, seed=42)
         tdf = datagen_spark.make_transcripts_df(

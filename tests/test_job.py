@@ -517,11 +517,14 @@ sys.path.insert(0, {repo!r})
 from graphene_spark import job, materialize
 
 merge = materialize.merge_insert_absent
+merged = []
 
 def merge_then_die(spark, df, path, *args, **kwargs):
     n = merge(spark, df, path, *args, **kwargs)
     if os.path.basename(path.rstrip("/")) == {table!r}:
-        os.kill(os.getpid(), signal.SIGKILL)
+        merged.append(path)
+        if len(merged) == {nth}:
+            os.kill(os.getpid(), signal.SIGKILL)
     return n
 
 materialize.merge_insert_absent = merge_then_die
@@ -529,9 +532,9 @@ job.main(sys.argv[1:])
 """
 
 
-def _run_killed_after_merge(spark, out: str, table: str) -> None:
+def _run_killed_after_merge(spark, out: str, table: str, nth: int = 1) -> None:
     """``job.main`` in a subprocess that SIGKILLs itself right after its
-    first merge into ``table`` returns.  The subprocess gets the test
+    ``nth`` merge into ``table`` returns.  The subprocess gets the test
     session's shuffle partitions, so its new tables pick the bucket count
     the clean run's did."""
     import subprocess
@@ -541,7 +544,7 @@ def _run_killed_after_merge(spark, out: str, table: str) -> None:
     env = dict(os.environ, SPARK_DRIVER_MEM="1g",
                SPARK_GRAFT_CPUS=spark.conf.get("spark.sql.shuffle.partitions"))
     proc = subprocess.run(
-        [sys.executable, "-c", _KILL_AFTER_MERGE.format(repo=repo, table=table),
+        [sys.executable, "-c", _KILL_AFTER_MERGE.format(repo=repo, table=table, nth=nth),
          *_JOB_ARGS, "--out", out, "--master", "local[2]"],
         env=env, capture_output=True, text=True, timeout=600,
     )
@@ -602,6 +605,106 @@ def test_resume_after_kill_following_nodes_merge(spark, clean_run, tmp_path, cap
         "nodes": {"key_buckets": 8, "source": "recorded"},
         "edges": {"key_buckets": 8, "source": "chosen"},
     }
+
+
+def test_resume_after_kill_following_postprocess_edges_merge(spark, clean_run, tmp_path, capsys):
+    """A job SIGKILLed right after the postprocess ``edges`` merge returns
+    (its third ``edges`` merge: one per bucket, then postprocess), with
+    both buckets' lineage committed but before the summary prints, then
+    resumed with ``--postprocess``, ends with exactly the tables of a clean
+    run; the resumed postprocess finds its edges already merged."""
+    import json
+
+    out = str(tmp_path / "out")
+    _run_killed_after_merge(spark, out, "edges", nth=3)
+    lin = spark.read.parquet(os.path.join(out, "lineage")).filter("status = 'done'")
+    assert lin.count() == 2
+
+    from graphene_spark import job
+
+    capsys.readouterr()
+    job.main([*_JOB_ARGS, "--out", out, "--master", "local[4]", "--resume"])
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["buckets"] == {"buckets_run": 0, "buckets_skipped": 2}
+    assert summary["postprocess"]["edges_inserted"] == 0
+    _assert_resumed_equals_clean(spark, out, clean_run)
+
+
+# ---------------------------------------------------------------------------
+# one extraction pass per bucket, released with the bucket
+# ---------------------------------------------------------------------------
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_job_extracts_once_per_bucket_and_releases_it(spark, tmp_path, monkeypatch):
+    """A 2-bucket job plans one extraction per bucket and feeds each turn
+    to Python once; every merge of a bucket reads that extraction from the
+    cache; and no persisted RDD outlives the run."""
+    from graphene_spark import extract, job
+
+    real_extract = extract.extract_rows_arrow
+    calls = []
+    fed = spark.sparkContext.accumulator(0)
+
+    def count_fed(batches):
+        for batch in batches:
+            fed.add(batch.num_rows)
+            yield batch
+
+    def counted_extract(transcripts, aliases, *args, **kwargs):
+        calls.append(kwargs.get("kinds"))
+        cols = transcripts.select("conv_id", "turn_idx", "text")
+        return real_extract(cols.mapInArrow(count_fed, cols.schema), aliases, *args, **kwargs)
+
+    real_merge = materialize.merge_insert_absent
+    plans = {}
+
+    def recording_merge(spark_, df, path, *args, **kwargs):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        plans.setdefault(os.path.basename(path), []).append(plan)
+        return real_merge(spark_, df, path, *args, **kwargs)
+
+    monkeypatch.setattr(extract, "extract_rows_arrow", counted_extract)
+    monkeypatch.setattr(materialize, "merge_insert_absent", recording_merge)
+    before = _persistent_rdds(spark)
+    job.main(["--transcripts", "synthetic:400", "--dictionary", "synthetic",
+              "--buckets", "2", "--out", str(tmp_path / "out"), "--master", "local[4]"])
+
+    assert calls == [None, None]
+    assert fed.value == 400
+    assert sorted(plans) == sorted(_TABLE_KEYS)
+    for table, table_plans in plans.items():
+        assert len(table_plans) == 2
+        assert all("InMemoryTableScan" in p for p in table_plans), table
+    assert _persistent_rdds(spark) == before
+
+
+def test_failed_bucket_releases_its_extraction(spark, tmp_path, monkeypatch):
+    """A bucket whose ``nodes`` merge raises, after its ``triples`` merge
+    has filled the extraction cache, leaves no persisted RDD behind and
+    writes no lineage row."""
+    from graphene_spark import job
+
+    real_merge = materialize.merge_insert_absent
+    live_at_fault = []
+
+    def fail_nodes_merge(spark_, df, path, *args, **kwargs):
+        if os.path.basename(path) == "nodes":
+            live_at_fault.append(_persistent_rdds(spark))
+            raise RuntimeError("injected nodes merge fault")
+        return real_merge(spark_, df, path, *args, **kwargs)
+
+    monkeypatch.setattr(materialize, "merge_insert_absent", fail_nodes_merge)
+    before = _persistent_rdds(spark)
+    out = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="injected nodes merge fault"):
+        job.main(["--transcripts", "synthetic:400", "--dictionary", "synthetic",
+                  "--buckets", "2", "--out", out, "--master", "local[4]"])
+    assert live_at_fault == [before + 1]
+    assert _persistent_rdds(spark) == before
+    assert not os.path.exists(os.path.join(out, "lineage"))
 
 
 # ---------------------------------------------------------------------------
