@@ -166,8 +166,10 @@ def main(argv: list[str] | None = None) -> None:
                 r["k"]: r["v"]
                 for r in res["metrics"]
                 .agg(
-                    F.sum("n_turns").alias("n_turns"),
-                    F.sum("n_error_turns").alias("n_errors"),
+                    # a bucket no conversation hashes to sums to NULL: it
+                    # ran, and it recorded 0 turns
+                    F.coalesce(F.sum("n_turns"), F.lit(0)).alias("n_turns"),
+                    F.coalesce(F.sum("n_error_turns"), F.lit(0)).alias("n_errors"),
                 )
                 .selectExpr("stack(2, 'n_turns', n_turns, 'n_errors', n_errors) as (k, v)")
                 .collect()
@@ -197,17 +199,16 @@ def main(argv: list[str] | None = None) -> None:
         spark, transcripts, args.out, process_bucket, n_buckets=args.buckets, sink=sink
     )
 
-    lineage = materialize.read_lineage(spark, os.path.join(args.out, "lineage"))
     # The table counts are read from the tables, not summed from lineage:
     # when a bucket's merges committed but its lineage row was lost, the
     # resumed run replays it and records 0 inserts for it, so a lineage sum
-    # would undercount exactly that state.
+    # would undercount exactly that state.  The parquet sink and lineage
+    # are counted from their footers, so on parquet the summary runs no
+    # Spark job; Iceberg answers its count from snapshot metadata.
     summary = {
         "buckets": totals,
-        "triples": sink.read("triples").count(),
-        "nodes": sink.read("nodes").count(),
-        "edges": sink.read("edges").count(),
-        "lineage_rows": lineage.count(),
+        **{t: sink.rows(t) for t in tables},
+        "lineage_rows": materialize.table_rows(os.path.join(args.out, "lineage")),
         "layout": layout,
     }
 

@@ -6,21 +6,24 @@ the natural key) as named in BASELINE.json:6.  The write path is PLUGGABLE:
 * ``ParquetMergeSink`` (sandbox default) — emulates
   ``MERGE INTO ... WHEN NOT MATCHED THEN INSERT`` on plain parquet:
   anti-join the incoming batch against the existing table on the key and
-  append only new rows, laid out by a key-hash bucket column (``_kb``) so
-  the anti-join is partition-pruned.  Like an Iceberg partition spec, the
-  bucket count belongs to the table: its first merge picks
-  ``min(spark.sql.shuffle.partitions, KEY_BUCKETS)``, so each task of the
-  clustered write gets about one bucket, and every write records the count
-  as column metadata in the data files' footers, so it travels with the
-  committed data.  Later merges and readers take it from the table; a
-  table whose footers record no count (written before counts were
-  recorded, or by another tool) has ``KEY_BUCKETS``.  Each merge clusters
-  its rows by ``_kb`` before the write, so it adds exactly one file per
-  ``_kb`` it touches, and it takes its insert count from the write itself.
+  append only new rows, laid out by a key-hash bucket column (``_kb``) that
+  readers probing by key prune on.  The anti-join reads the key columns of
+  the whole table inside the merge's one action, its write.  Like an
+  Iceberg partition spec, the bucket count belongs to the table: its first
+  merge picks ``min(spark.sql.shuffle.partitions, KEY_BUCKETS)``, so each
+  task of the clustered write gets about one bucket, and every write
+  records the count as column metadata in the data files' footers, so it
+  travels with the committed data.  Later merges and readers take it from
+  the table; a table whose footers record no count (written before counts
+  were recorded, or by another tool) has ``KEY_BUCKETS``.  Each merge
+  clusters its rows by ``_kb`` before the write, so it adds exactly one
+  file per ``_kb`` it touches, and it takes its insert count from the
+  write itself.
   Readers get the table's schema from one data file's footer on the
-  driver, so a read launches no schema-inference job.  Combined with
-  deterministic ids (graph.node_id) this makes every write idempotent
-  (A7 / post-import-cypher MERGE; Importer.groovy:36-52).
+  driver, so a read launches no schema-inference job, and ``rows`` sums
+  the footers' row counts, so counting a table launches no job at all.
+  Combined with deterministic ids (graph.node_id) this makes every write
+  idempotent (A7 / post-import-cypher MERGE; Importer.groovy:36-52).
 * ``IcebergMergeSink`` — issues REAL ``MERGE INTO`` SQL against an Iceberg
   catalog when one is configured on the session (runtime jar +
   ``spark.sql.catalog.<name>`` confs).  Same null-safe key semantics
@@ -101,53 +104,47 @@ def merge_insert_absent(
 ) -> int:
     """Insert-if-absent on ``keys`` (idempotent MERGE).  Returns rows inserted.
 
-    The table is laid out partitioned by a key-hash bucket (``_kb``), so the
-    anti-join against existing data reads ONLY the partitions the incoming
-    batch touches (partition pruning) instead of the whole table — the
-    parquet emulation of Iceberg's MERGE INTO on a bucket-partitioned table.
-    Without this, a B-bucket resumable run costs O(B^2) table scans.  The
-    bucket count is the table's own (``key_buckets``): picked by the merge
-    that creates the table, read back by every later one, and recorded in
-    every file this merge writes.
+    The merge is one Spark action, its clustered write: the incoming rows,
+    deduplicated on ``keys``, are anti-joined against the key columns of
+    every ``_kb`` of the existing table and the survivors appended — the
+    parquet emulation of Iceberg's MERGE INTO ... WHEN NOT MATCHED THEN
+    INSERT.  The scan is not narrowed to the buckets the batch touches: a
+    batch of k distinct keys misses a given one of n buckets with
+    probability (1-1/n)^k, so on job-sized batches every bucket is touched
+    and a touched-bucket collect would only add an action.  Each merge
+    therefore reads its table's key columns once, and a B-bucket resumable
+    run reads each table B times; merging each table once per run (ROADMAP
+    item 4) removes that factor.  The bucket count is the table's own
+    (``key_buckets``): picked by the merge that creates the table, read
+    back by every later one, and recorded in every file this merge writes.
 
     ``layout_keys`` (default: ``keys``) picks WHICH columns the ``_kb``
     layout hashes — the Iceberg analog of choosing the table's PARTITIONED BY
     transform independently of the MERGE identity key.  It must be a SUBSET
     of ``keys``: then equal identity keys imply equal layout keys imply equal
-    ``_kb``, so the touched-partition pruning of the anti-join stays sound.
-    Use it when readers probe the table on a different key than the identity
-    (the streaming dedup band index probes on (band_idx, band_sig) while the
-    row identity also carries doc_id)."""
+    ``_kb``, which the anti-join matches on and ``read_merged_pruned``
+    probes by.  Use it when readers probe the table on a different key than
+    the identity (the streaming dedup band index probes on (band_idx,
+    band_sig) while the row identity also carries doc_id)."""
     lk = layout_keys or keys
     missing = [c for c in lk if c not in keys]
     if missing:
         raise ValueError(
             f"layout_keys {lk} must be a subset of identity keys {keys} "
             f"(violators: {missing}) — otherwise two rows with equal identity "
-            "keys can land in different _kb partitions and the pruned "
-            "anti-join re-inserts duplicates"
+            "keys can land in different _kb partitions, the anti-join misses "
+            "them and re-inserts duplicates"
         )
     recover_compaction(path)
     exists = os.path.exists(path)
     n_buckets, _ = key_buckets(spark, path)
-    base = df.dropDuplicates(keys).withColumn("_kb", layout_bucket(lk, n_buckets))
-    incoming = base
+    incoming = df.dropDuplicates(keys).withColumn("_kb", layout_bucket(lk, n_buckets))
     if exists:
-        # persist: two actions follow (touched-bucket collect, write) —
-        # without it the incoming frame's full upstream pipeline re-executes
-        # per action
-        base.persist()
-        touched = [r["_kb"] for r in incoming.select("_kb").distinct().collect()]
-        existing = (
-            _read_table(spark, path)
-            .filter(F.col("_kb").isin(touched))  # partition-pruned scan
-            .select(*keys, "_kb")
-        )
+        ex = _read_table(spark, path).select(*keys, "_kb")
         # null-safe equality: a plain equi-anti-join never matches rows with
         # a null key value, so such rows were re-inserted on EVERY replay —
         # dropDuplicates treats nulls as equal, the join must agree with it
         # for the idempotency contract to hold
-        ex = existing
         for c in [*keys, "_kb"]:
             ex = ex.withColumnRenamed(c, f"_ex_{c}")
         cond = None
@@ -156,9 +153,7 @@ def merge_insert_absent(
             cond = e if cond is None else cond & e
         incoming = incoming.join(ex, cond, "left_anti")
     n = _write_clustered(incoming, path, "append", n_buckets)
-    if exists:
-        base.unpersist()
-    elif n == 0:
+    if not exists and n == 0:
         # an empty write adds no data file but still creates the directory,
         # holding only the commit marker: keep "no rows, no table" for the
         # existence checks of callers and of the next merge
@@ -194,36 +189,46 @@ def _write_clustered(df: DataFrame, path: str, mode: str, n_buckets: int) -> int
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
+def _committed_files(path: str) -> list[str]:
+    """The data files of the parquet table at ``path``, sorted; none for a
+    missing table.
+
+    Follows Spark's listing rule at every level: names starting with ``.``,
+    and names starting with ``_`` unless they contain ``=``, are skipped.
+    So ``_kb=3/`` is read, while uncommitted task output under
+    ``_temporary``, the ``_SUCCESS`` marker and ``.crc`` sidecars are not."""
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not hidden(d))
+        files += sorted(os.path.join(root, n) for n in names if not hidden(n))
+    return files
+
+
+def table_rows(path: str) -> int:
+    """The row count of the parquet table at ``path`` (0 when it does not
+    exist), summed from its data files' footers on the driver: no Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in _committed_files(path))
+
+
 def _footer_schema(path: str) -> StructType | None:
     """The schema of a merged table, ``_kb`` included, from the Spark row
     metadata in one committed data file's footer, read on the driver; None
-    when the table has no such file or the file has no such key.
-
-    Only ``_kb=*`` directories and data files not prefixed ``_`` or ``.``
-    count as committed: uncommitted task output lives under ``_temporary``,
-    and ``.crc`` sidecars and the ``_SUCCESS`` marker hold no schema."""
+    when the table has no data file or the file has no such key."""
     import pyarrow.parquet as pq
 
-    try:
-        kb_dirs = sorted(
-            e.path for e in os.scandir(path) if e.is_dir() and e.name.startswith("_kb=")
-        )
-    except FileNotFoundError:
+    files = _committed_files(path)
+    if not files:
         return None
-    for d in kb_dirs:
-        files = sorted(
-            e.path
-            for e in os.scandir(d)
-            if e.is_file() and e.name.endswith(".parquet")
-            and not e.name.startswith(("_", "."))
-        )
-        if files:
-            meta = pq.read_metadata(files[0]).metadata or {}
-            if _SPARK_ROW_METADATA not in meta:
-                return None
-            schema = StructType.fromJson(json.loads(meta[_SPARK_ROW_METADATA]))
-            return schema.add("_kb", IntegerType())
-    return None
+    meta = pq.read_metadata(files[0]).metadata or {}
+    if _SPARK_ROW_METADATA not in meta:
+        return None
+    schema = StructType.fromJson(json.loads(meta[_SPARK_ROW_METADATA]))
+    return schema.add("_kb", IntegerType())
 
 
 def _read_table(spark: SparkSession, path: str) -> DataFrame:
@@ -470,6 +475,10 @@ class ParquetMergeSink:
     def read(self, name: str) -> DataFrame:
         return read_merged(self.spark, self.target(name))
 
+    def rows(self, name: str) -> int:
+        recover_compaction(self.target(name))
+        return table_rows(self.target(name))
+
     def exists(self, name: str) -> bool:
         return os.path.exists(self.target(name))
 
@@ -620,6 +629,10 @@ class IcebergMergeSink:
 
     def read(self, name: str) -> DataFrame:
         return self.spark.table(self.table(name))
+
+    def rows(self, name: str) -> int:
+        # Iceberg answers an unfiltered count from snapshot metadata
+        return self.read(name).count()
 
     def exists(self, name: str) -> bool:
         return self.spark.catalog.tableExists(self.table(name))

@@ -123,16 +123,18 @@ def dedup_batch(
     band index (big, but hash-partitioned by the merge layout); candidate
     pairs are estimate-filtered on signature agreement, exact-verified by
     re-shingling ONLY the touched accepted docs (semi-join on id, same
-    shape as minhash_duplicates' verify), and the accepted corpus is never
-    scanned in full.  State layout under ``out_dir``:
+    shape as minhash_duplicates' verify), and the accepted corpus's text is
+    never scanned in full (each batch's keyed merge reads only its key
+    column).  State layout under ``out_dir``:
 
     * ``accepted``   — the curated corpus (insert-if-absent on doc_id);
     * ``band_index`` — (_id, band_idx, band_sig, _sig) rows; identity key
       (doc_id, band_idx, band_sig), LAID OUT by the probe key
       (band_idx, band_sig) — ``merge_insert_absent(layout_keys=...)`` — so
       the per-batch probe partition-prunes to the touched ``_kb`` buckets
-      instead of scanning the index (layout ⊆ identity keeps the merge's
-      pruned anti-join sound).  ``compact_dedup_state`` is the maintenance
+      instead of scanning the index (layout ⊆ identity keeps equal
+      identity keys in one ``_kb``, which the merge's anti-join matches on
+      and the probe reads by).  ``compact_dedup_state`` is the maintenance
       entry point: re-merge the per-batch small files to one per bucket.
 
     Exactly-once under replays: both appends are keyed merges, and the

@@ -141,8 +141,9 @@ def main() -> None:
         "`_kb=` partitions the batch's band keys hash into.  The index is laid out\n"
         "by the probe key (`merge_insert_absent(layout_keys=[\"band_idx\",\n"
         "\"band_sig\"])`, identity `(doc_id, band_idx, band_sig)` — layout ⊆ identity\n"
-        "keeps the merge's pruned anti-join sound), and `read_merged_pruned`\n"
-        "recomputes the writer's exact layout hash (`materialize.layout_bucket`,\n"
+        "keeps equal identity keys in one `_kb`, which the merge's anti-join matches\n"
+        "on and this probe reads by), and `read_merged_pruned` recomputes\n"
+        "the writer's exact layout hash (`materialize.layout_bucket`,\n"
         "with the index's own bucket count from its footers, `materialize.key_buckets`)\n"
         "over the batch's distinct band keys and filters the scan on the resulting\n"
         "`_kb` set.  The filter lands in `PartitionFilters` — the hive-partition\n"

@@ -831,3 +831,139 @@ def test_lineage_row_matches_local_relation_writer(spark, tmp_path):
         assert got.schema == want.schema
         assert _same_rows(got, want)
     assert materialize.completed_buckets(spark, new) == {0}
+
+
+# ---------------------------------------------------------------------------
+# one action per merge; a closing summary that runs no Spark job
+# ---------------------------------------------------------------------------
+
+def test_merge_into_existing_table_is_one_write(spark, tmp_path, monkeypatch):
+    """A merge into an existing table runs its clustered write and no other
+    action: it collects, counts and persists nothing, and leaves no
+    persisted RDD behind."""
+    import pyspark.sql.functions as F
+
+    path = str(tmp_path / "t")
+
+    def frame(lo, hi):
+        return spark.range(lo, hi, numPartitions=4).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+        )
+
+    assert materialize.merge_insert_absent(spark, frame(0, 300), path, ["k"]) == 300
+
+    frame_class = type(frame(0, 1))
+    calls = []
+    for name in ("collect", "count", "first", "persist", "cache"):
+        real = getattr(frame_class, name)
+
+        def recorded(self, *args, _name=name, _real=real, **kwargs):
+            calls.append(_name)
+            return _real(self, *args, **kwargs)
+
+        monkeypatch.setattr(frame_class, name, recorded)
+    real_write = materialize._write_clustered
+    writes = []
+
+    def counted_write(*args, **kwargs):
+        writes.append(args[1])
+        return real_write(*args, **kwargs)
+
+    monkeypatch.setattr(materialize, "_write_clustered", counted_write)
+    before = _persistent_rdds(spark)
+    assert materialize.merge_insert_absent(spark, frame(250, 400), path, ["k"]) == 100
+    assert calls == []
+    assert writes == [path]
+    assert _persistent_rdds(spark) == before
+    monkeypatch.undo()
+    assert materialize.read_merged(spark, path).count() == 400
+
+
+def test_job_summary_runs_no_spark_job(spark, tmp_path, monkeypatch):
+    """Without ``--postprocess``, ``job.main`` starts no Spark job once the
+    bucket loop has returned: the summary counts come from the footers."""
+    import uuid
+
+    from graphene_spark import job
+
+    sc = spark.sparkContext
+    listener_bus = sc._jsc.sc().listenerBus()
+    group = f"job-summary-{uuid.uuid4().hex}"
+    real_loop = materialize.run_with_lineage
+    at_loop_end = []
+
+    def recording_loop(*args, **kwargs):
+        totals = real_loop(*args, **kwargs)
+        listener_bus.waitUntilEmpty()
+        at_loop_end.append(set(sc.statusTracker().getJobIdsForGroup(group)))
+        return totals
+
+    monkeypatch.setattr(materialize, "run_with_lineage", recording_loop)
+    sc.setJobGroup(group, "job.main without --postprocess")
+    try:
+        job.main(["--transcripts", "synthetic:400", "--dictionary", "synthetic",
+                  "--buckets", "2", "--out", str(tmp_path / "out"), "--master", "local[4]"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    listener_bus.waitUntilEmpty()
+    assert len(at_loop_end) == 1 and at_loop_end[0]
+    assert set(sc.statusTracker().getJobIdsForGroup(group)) == at_loop_end[0]
+
+
+def test_parquet_sink_rows_match_spark_count(spark, clean_run, tmp_path):
+    """``ParquetMergeSink.rows`` counts what ``spark.read.parquet`` reads:
+    on the tables and lineage of a job run, on a table holding uncommitted
+    task output, a commit marker and checksum files, and on a missing
+    table (0)."""
+    import shutil
+
+    import pyspark.sql.functions as F
+
+    sink = materialize.ParquetMergeSink(spark, clean_run)
+    for name in [*_TABLE_KEYS, "lineage"]:
+        rows = sink.rows(name)
+        assert rows > 0, name  # the _kb= directories are read
+        assert rows == spark.read.parquet(sink.target(name)).count(), name
+
+    path = str(tmp_path / "t")
+    df = spark.range(500).select(F.col("id").alias("k"), F.col("id").alias("v"))
+    assert materialize.merge_insert_absent(spark, df, path, ["k"]) == 500
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    data = sorted(_data_files(path))
+    uncommitted = os.path.join(path, "_temporary", "0", "_temporary", "attempt_0",
+                               os.path.basename(os.path.dirname(data[0])))
+    os.makedirs(uncommitted)
+    shutil.copy(data[0], os.path.join(uncommitted, "part-00000-planted.parquet"))
+    shutil.copy(data[0], os.path.join(os.path.dirname(data[0]), ".planted.parquet.crc"))
+    sink = materialize.ParquetMergeSink(spark, str(tmp_path))
+    assert sink.rows("t") == spark.read.parquet(path).count() == 500
+
+    assert sink.rows("missing") == 0
+
+
+def test_empty_buckets_record_zero_turns_and_resume(spark, tmp_path, capsys):
+    """A run with more buckets than conversations completes: every bucket,
+    empty or not, gets a ``done`` lineage row, the empty ones with 0 turns,
+    and a resumed run skips them all and inserts nothing."""
+    import json
+
+    from graphene_spark import job
+
+    out = str(tmp_path / "out")
+    argv = ["--transcripts", "synthetic:100", "--dictionary", "synthetic",
+            "--buckets", "16", "--out", out, "--master", "local[4]"]
+    capsys.readouterr()
+    job.main(argv)
+    first = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    lin = spark.read.parquet(os.path.join(out, "lineage")).collect()
+    assert sorted(r["bucket"] for r in lin) == list(range(16))
+    assert {r["status"] for r in lin} == {"done"}
+    turns = [r["n_turns"] for r in lin]
+    assert sum(turns) == 100 and turns.count(0) >= 16 - 5
+
+    job.main([*argv, "--resume"])
+    resumed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert resumed["buckets"] == {"buckets_run": 0, "buckets_skipped": 16}
+    for name in _TABLE_KEYS:
+        assert resumed[name] == first[name] > 0
+    assert resumed["lineage_rows"] == 16
